@@ -9,8 +9,9 @@ import duckdb
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "target/verify_out"
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+# every <table>.parquet of the sf dir is registered as a view of that name
+TABLES = sorted(os.path.basename(p)[:-len(".parquet")]
+                for p in glob.glob(f"{SF}/*.parquet"))
 
 con = duckdb.connect()
 for t in TABLES:

@@ -161,29 +161,29 @@ object Bench {
     // before any timed pass: the sf0.001 warmup above built artifacts for a
     // DIFFERENT fingerprint key, and with SPARK_GRAFT_BENCH_RUNS=1 a cold
     // artifact would fold its one-time build into the first probe timing —
-    // probe queries must measure probes on any run, not index construction
-    try graft.ops.SearchOps.ensureLexIndex(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.VectorOps.ensureCentroids(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.VectorOps.ensureTrainedIvf(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    // q_ivf_topk_batch probes a corpus-sized-nlist trained index (nlist =
-    // sqrt N) — a different fingerprint than the default-nlist artifact
-    // above, so build it here too
-    try {
-      val nVecs = graft.ops.Tables.t(spark, sfDir, "embeddings").count()
-      graft.ops.VectorOps.ensureTrainedIvf(spark, sfDir,
-        nlist = graft.ops.VectorOps.adaptiveNlist(nVecs)): Unit
-    } catch { case _: Throwable => () }
-    try graft.ops.PqOps.ensurePq(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.VectorOps.ensureSq8(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.BpeOps.ensureBpe(spark, sfDir): Unit
-    catch { case _: Throwable => () }
-    try graft.ops.SearchOps.ensureBigramLm(spark, sfDir): Unit
-    catch { case _: Throwable => () }
+    // probe queries must measure probes on any run, not index construction.
+    // A failed build therefore stops the bench instead of being retried
+    // (and timed) inside the first probe.
+    import graft.ops.{BpeOps, PqOps, SearchOps, Tables, VectorOps}
+    val artifacts: Seq[(String, () => String)] = Seq(
+      "lex_index" -> (() => SearchOps.ensureLexIndex(spark, sfDir)),
+      "ivf_centroids" -> (() => VectorOps.ensureCentroids(spark, sfDir)),
+      "ivf_trained" -> (() => VectorOps.ensureTrainedIvf(spark, sfDir)),
+      // q_ivf_topk_batch probes a corpus-sized-nlist trained index (nlist =
+      // sqrt N) — a different fingerprint than the default-nlist artifact
+      "ivf_trained_batch" -> (() => VectorOps.ensureTrainedIvf(spark, sfDir,
+        nlist = VectorOps.adaptiveNlist(Tables.t(spark, sfDir, "embeddings").count()))),
+      "pq" -> (() => PqOps.ensurePq(spark, sfDir)),
+      "sq8_codes" -> (() => VectorOps.ensureSq8(spark, sfDir)),
+      "bpe_tokenizer" -> (() => BpeOps.ensureBpe(spark, sfDir)),
+      "bigram_lm" -> (() => SearchOps.ensureBigramLm(spark, sfDir)))
+    artifacts.foreach { case (name, ensure) =>
+      try ensure(): Unit
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] artifact $name FAILED: ${e.getMessage}")
+        throw e
+      }
+    }
     // untimed warmup pass at the TARGET sf: first-touch page cache, JIT at
     // the real data shapes — doubles as the round-robin's pass 0
     run.foreach { name =>

@@ -24,35 +24,16 @@ import org.apache.spark.sql.functions._
   *     orthogonal to the original for random-ish vectors) for the same
   *     reason in cosine space.
   *
-  * The copy is built once under target/bench_scaled/ behind a commit
-  * marker (same recheck-before-delete discipline as the IVF centroid
-  * artifact) and reused across runs.
+  * The copy is an `ArtifactStore` artifact under target/bench_scaled/,
+  * built once and reused across runs.
   */
 object BenchScale {
 
   def ensureScaled(spark: SparkSession, sfDir: String, mult: Int): String = {
     require(mult >= 2, s"SPARK_GRAFT_BENCH_MULT must be >= 2, got $mult")
-    val base = new java.io.File("target/bench_scaled")
-    val name = new java.io.File(sfDir).getName + s"_x$mult"
-    val dir = new java.io.File(base, name)
-    def committed = new java.io.File(dir, "_GRAFT_SCALED_OK").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base, s"$name.tmp.${java.util.UUID.randomUUID}")
-      build(spark, sfDir, mult, tmp.toString)
-      new java.io.File(tmp, "_GRAFT_SCALED_OK").createNewFile()
-      if (committed) graft.ops.VectorOps.deleteRecursively(tmp) // lost a race
-      else {
-        graft.ops.VectorOps.deleteRecursively(dir) // uncommitted leftovers
-        try java.nio.file.Files.move(tmp.toPath, dir.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileSystemException =>
-          graft.ops.VectorOps.deleteRecursively(tmp)
-        }
-      }
-      if (!committed)
-        sys.error(s"scaled bench copy at $dir could not be installed")
-    }
-    dir.toString
+    graft.ops.ArtifactStore.ensure("bench_scaled",
+      new java.io.File(sfDir).getName + s"_x$mult")(
+      tmp => build(spark, sfDir, mult, tmp.toString))
   }
 
   private def replicate(df: DataFrame, mult: Int)(

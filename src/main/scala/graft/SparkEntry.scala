@@ -2284,7 +2284,7 @@ object SparkEntry {
     * generator is pinned (QueryPipelineSpec) to emit — retrieval order,
     * value provenance, and the final grounded answer in one hash. */
   private def nlGroundOracle: Map[String, String] =
-    graft.ops.GroundOps.oracleGroundPath.map { p =>
+    graft.ops.ArtifactStore.recorded("nl_ground").map { p =>
       val v = graft.ops.GroundOps.groundedValue
       "q_nl_semantic_ground" ->
         s"""WITH coll AS (SELECT chunk_id, text, embedding
@@ -2304,7 +2304,7 @@ object SparkEntry {
     }.toMap
 
   private def sq8Oracle: Map[String, String] =
-    graft.ops.VectorOps.oracleSq8Path.map { p =>
+    graft.ops.ArtifactStore.recorded("sq8_codes").map { p =>
       "q_sq8_topk" ->
         s"""WITH c AS (SELECT vec_id, codes FROM read_parquet('$p/*.parquet')),
            |qc AS (SELECT codes AS qcodes FROM c WHERE vec_id = 0),
@@ -2402,7 +2402,7 @@ object SparkEntry {
     * recursive CTE stepping (word, rank, position) with the accumulator
     * list as state, exactly `encodeWords`' fold semantics. */
   private def bpeEncodeOracle: Map[String, String] =
-    graft.ops.BpeOps.oracleMergesPath.map { p =>
+    graft.ops.ArtifactStore.recorded("bpe_tokenizer").map { p =>
       "q_bpe_encode" ->
         s"""WITH RECURSIVE
            |m AS (SELECT rank AS mrank, "left" AS l, "right" AS r
@@ -2457,7 +2457,7 @@ object SparkEntry {
       s"""SELECT label FROM c CROSS JOIN q
          |  ORDER BY ${cosSql("centroid", "qv")} DESC, label ASC LIMIT $nprobe"""
         .stripMargin
-    val flat = graft.ops.VectorOps.oracleCentroidsPath.map { p =>
+    val flat = graft.ops.ArtifactStore.recorded("ivf_centroids").map { p =>
       "q_ivf_topk" ->
         s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
            |c AS (SELECT label, centroid FROM read_parquet('$p/*.parquet')),
@@ -2466,7 +2466,7 @@ object SparkEntry {
            |FROM embeddings e JOIN probed USING (label) CROSS JOIN q
            |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin
     }
-    val trained = graft.ops.VectorOps.oracleTrainedDefaultPath.map { p =>
+    val trained = graft.ops.ArtifactStore.recorded("ivf_trained").map { p =>
       "q_ivf_trained_topk" ->
         s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
            |c AS (SELECT label, centroid FROM read_parquet('$p/centroids/*.parquet')),
@@ -2478,7 +2478,7 @@ object SparkEntry {
            |CROSS JOIN q
            |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin
     }
-    val batch = graft.ops.VectorOps.oracleBatchTrainedPath.map { p =>
+    val batch = graft.ops.ArtifactStore.recorded("ivf_trained_batch").map { p =>
       "q_ivf_topk_batch" ->
         s"""WITH qs AS (SELECT vec_id AS query_id, embedding AS qv
            |  FROM embeddings WHERE vec_id % 100 = 0),
@@ -2537,7 +2537,7 @@ object SparkEntry {
       s"""SELECT e.vec_id, ${e6(cosSql("embedding", "qv"))} AS score_e6
          |FROM embeddings e JOIN short USING (vec_id) CROSS JOIN q
          |ORDER BY score_e6 DESC, vec_id ASC LIMIT 10""".stripMargin
-    val flat = graft.ops.PqOps.oraclePqPath.map { pq =>
+    val flat = graft.ops.ArtifactStore.recorded("pq").map { pq =>
       "q_pq_topk" ->
         s"""WITH ${adcCtes(pq)},
            |sc AS (SELECT vec_id, sum(pd_e6) AS adc
@@ -2547,8 +2547,8 @@ object SparkEntry {
            |$rerank""".stripMargin
     }
     val ivfpq = for {
-      pq <- graft.ops.PqOps.oraclePqPath
-      ivf <- graft.ops.VectorOps.oracleTrainedDefaultPath
+      pq <- graft.ops.ArtifactStore.recorded("pq")
+      ivf <- graft.ops.ArtifactStore.recorded("ivf_trained")
     } yield "q_ivfpq_topk" ->
       s"""WITH ${adcCtes(pq)},
          |c AS (SELECT label, centroid AS lc

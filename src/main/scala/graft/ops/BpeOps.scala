@@ -125,22 +125,17 @@ object BpeOps {
   }
 
   /** Write-once trained-tokenizer artifact: the learned merge table,
-    * persisted per (corpus fingerprint, nMerges) under the same
-    * ArtifactStore lifecycle as the IVF/lexical indexes. Training runs at
-    * most once per corpus; all three query faces (and any caller) share the
+    * persisted per (corpus fingerprint, nMerges). Training runs at most
+    * once per corpus; all three query faces (and any caller) share the
     * result instead of each re-running the 20-round driver-blocking loop —
     * which is also how a production pipeline treats a tokenizer: a trained
-    * artifact consumed by later stages, not something re-derived per query. */
-  def ensureBpe(s: SparkSession, sf: String, nMerges: Int = 20): String = {
-    val base = new java.io.File("target/bpe_tokenizer")
-    val src = new java.io.File(s"$sf/documents.parquet")
-    val fpTag = ArtifactStore.fingerprint(src, s"bpe-v1-$nMerges")
-    val dir = new java.io.File(base,
-      "sf" + sf.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fpTag)
-    def committed = new java.io.File(dir, "_SUCCESS").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base,
-        s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
+    * artifact consumed by later stages, not something re-derived per query.
+    * The merge table doubles as the oracle input "bpe_tokenizer":
+    * q_bpe_encode's DuckDB oracle replays the learned merges over the same
+    * word sample. */
+  def ensureBpe(s: SparkSession, sf: String, nMerges: Int = 20): String =
+    ArtifactStore.record("bpe_tokenizer", ArtifactStore.ensure("bpe_tokenizer",
+        ArtifactStore.sourceName(sf, "documents", s"bpe-v1-$nMerges")) { tmp =>
       val (merges, vocab) = learnBpe(tWide(s, sf, "documents"), "text", nMerges)
       import s.implicits._
       merges.toDF("rank", "left", "right", "n")
@@ -150,25 +145,7 @@ object BpeOps {
         .write.mode("overwrite").option("compression", "zstd").parquet(tmp.toString)
       // training state is no longer needed once the merge table is durable
       org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint(vocab)
-      ArtifactStore.install(base, dir, tmp, () => committed)
-      if (!committed) sys.error(s"BPE artifact at $dir could not be installed")
-    }
-    // the merge table doubles as an ORACLE INPUT: q_bpe_encode's DuckDB
-    // oracle replays the learned merges over the same word sample, so the
-    // dump needs the artifact's location. Recorded (not derived in
-    // oracleSql) because the path embeds a content fingerprint only known
-    // once the artifact exists; Verify runs every query before dumping
-    // oracle_sql.json, so the path is always recorded by then.
-    lastEnsured = Some(dir.getAbsolutePath)
-    dir.toString
-  }
-
-  @volatile private var lastEnsured: Option[String] = None
-
-  /** Absolute path of the most recently ensured merge-table artifact in
-    * this JVM (None until some query trained/loaded one) — consumed by
-    * `SparkEntry.oracleSql` to make `q_bpe_encode` hash-checkable. */
-  def oracleMergesPath: Option[String] = lastEnsured
+    })
 
   /** The learned merge table from the persisted artifact — a merge-table
     * -sized driver collect (20 rows; metadata-scale, like a Delta log
@@ -198,7 +175,7 @@ object BpeOps {
     * OOV words (deterministic compounds of vocabulary words, which the
     * training corpus never saw) with the learned merge table.
     * ORACLE-CHECKED since r12: the persisted merge table is registered as
-    * an oracle input ([[oracleMergesPath]]) and DuckDB replays the encode
+    * an oracle input ("bpe_tokenizer", [[ensureBpe]]) and DuckDB replays the encode
     * — char-split + each merge rank as a left-to-right non-overlapping
     * fold, expressed as a recursive CTE over (word, rank, position) —
     * so the fixed-depth codegen fold chain is hash-verified against an

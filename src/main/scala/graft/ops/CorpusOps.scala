@@ -229,24 +229,10 @@ object CorpusOps {
     "doc_id BIGINT, source STRING, n_chars BIGINT, dedup_keep BOOLEAN, " +
       "contaminated BOOLEAN, quality_pass BOOLEAN")
 
-  def ensureCurationStages(s: SparkSession, sf: String): String = {
-    val base = new java.io.File("target/curation_stages")
-    val src = new java.io.File(s"$sf/documents.parquet")
-    val fpTag = ArtifactStore.fingerprint(src, "cur-v1")
-    val dir = new java.io.File(base,
-      "sf" + sf.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fpTag)
-    def committed = new java.io.File(dir, "_GRAFT_OK").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base,
-        s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
-      buildCurationStages(s, sf, tmp.toString)
-      new java.io.File(tmp, "_GRAFT_OK").createNewFile()
-      ArtifactStore.install(base, dir, tmp, () => committed)
-      if (!committed)
-        sys.error(s"curation-stage artifact at $dir could not be installed")
-    }
-    dir.toString
-  }
+  def ensureCurationStages(s: SparkSession, sf: String): String =
+    ArtifactStore.ensure("curation_stages",
+      ArtifactStore.sourceName(sf, "documents", "cur-v1"))(
+      tmp => buildCurationStages(s, sf, tmp.toString))
 
   private def curationStages(s: SparkSession, sf: String): DataFrame =
     s.read.schema(stagesSchema)

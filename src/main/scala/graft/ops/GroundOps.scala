@@ -14,7 +14,7 @@ import graft.pipeline.{IngestionPipeline, QueryPipeline}
   * the collection artifact and shapes the evidence for the oracle.
   *
   * ORACLE REPLAY: the chunk collection AND the question's embedding are
-  * persisted write-once (the IVF/SQ8 ArtifactStore pattern), so DuckDB
+  * persisted write-once (an `ArtifactStore` artifact), so DuckDB
   * re-scores every chunk with the identical sequential-double cosine,
   * re-derives the best-scoring hit that carries the grounded value, and
   * runs the grounded SQL — certifying retrieval order, value provenance,
@@ -40,17 +40,10 @@ object GroundOps {
     * scoring without the xxhash64 kernel DuckDB lacks; float roundtrip
     * through parquet is exact, so inline and persisted vectors are
     * bit-identical). */
-  def ensureGroundCollection(s: SparkSession, sf: String): String = {
-    val base = new java.io.File("target/nl_ground")
-    val src = new java.io.File(s"$sf/nation.parquet")
-    val fpTag = ArtifactStore.fingerprint(src, s"nlground-v1:$question")
-    val dir = new java.io.File(base,
-      "sf" + sf.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fpTag)
-    def committed = new java.io.File(dir, "_GRAFT_OK").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base,
-        s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
-      val df = s.read.parquet(src.toString)
+  def ensureGroundCollection(s: SparkSession, sf: String): String =
+    ArtifactStore.record("nl_ground", ArtifactStore.ensure("nl_ground",
+        ArtifactStore.sourceName(sf, "nation", s"nlground-v1:$question")) { tmp =>
+      val df = s.read.parquet(s"$sf/nation.parquet")
       val chunks = IngestionPipeline.chunkTable(df, df.columns.head, budget = 1000)
       chunks
         .withColumn("embedding", IngestionPipeline.stubEmbed(dim)(col("text")))
@@ -60,20 +53,7 @@ object GroundOps {
       s.range(1)
         .select(IngestionPipeline.stubEmbed(dim)(lit(question)).as("qv"))
         .write.mode("overwrite").parquet(s"$tmp/qvec")
-      new java.io.File(tmp, "_GRAFT_OK").createNewFile()
-      ArtifactStore.install(base, dir, tmp, () => committed)
-      if (!committed)
-        sys.error(s"nl-ground collection at $dir could not be installed")
-    }
-    lastGround = Some(dir.getAbsolutePath)
-    dir.toString
-  }
-
-  @volatile private var lastGround: Option[String] = None
-
-  /** Absolute path of the most recently ensured grounding collection in
-    * this JVM — consumed by `SparkEntry.oracleSql` (the IVF/SQ8 pattern). */
-  def oracleGroundPath: Option[String] = lastGround
+    })
 
   /** The driver face: run the misspelled question through the REAL
     * pipeline and emit the grounded SQL's rows joined with the evidence —

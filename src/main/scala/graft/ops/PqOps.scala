@@ -178,28 +178,12 @@ object PqOps {
       .groupBy("vec_id")
       .agg(sum(col("pd_e6")).as("adc_d2_e6"))
 
-  /** Build-if-absent for the PQ artifact: `codebooks/` + `codes/` under
-    * one content-fingerprinted dir, committed as a PAIR by `_GRAFT_OK`
-    * and installed under the ArtifactStore lock — the exact lifecycle of
-    * the trained IVF (`VectorOps.ensureTrainedIvf`). */
-  // PQ artifact location recorded at query time for the DuckDB oracle
-  // replay (the BpeOps.oracleMergesPath pattern).
-  @volatile private var lastPq: Option[String] = None
-
-  /** Absolute path of the PQ artifact (codebooks/ + codes/) the probe
-    * queries read — consumed by `SparkEntry.oracleSql`. */
-  def oraclePqPath: Option[String] = lastPq
-
-  def ensurePq(s: SparkSession, sf: String, iters: Int = 2): String = {
-    val base = new java.io.File("target/pq")
-    val src = new java.io.File(s"$sf/embeddings.parquet")
-    val fpTag = ArtifactStore.fingerprint(src, s"pq:$M:$KSUB:$iters:v2")
-    val dir = new java.io.File(base,
-      "sf" + sf.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fpTag)
-    def committed = new java.io.File(dir, "_GRAFT_OK").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base,
-        s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
+  /** The PQ artifact: `codebooks/` + `codes/` under one
+    * content-fingerprinted dir, committed as a PAIR by the one marker.
+    * Recorded as the oracle input "pq" for the DuckDB replay. */
+  def ensurePq(s: SparkSession, sf: String, iters: Int = 2): String =
+    ArtifactStore.record("pq", ArtifactStore.ensure("pq",
+        ArtifactStore.sourceName(sf, "embeddings", s"pq:$M:$KSUB:$iters:v2")) { tmp =>
       val e = t(s, sf, "embeddings")
       val books = trainPq(e, iters)
       books.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -210,14 +194,7 @@ object PqOps {
         .option("compression", "zstd")
         .parquet(new java.io.File(tmp, "codes").toString)
       org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint(books)
-      new java.io.File(tmp, "_GRAFT_OK").createNewFile()
-      ArtifactStore.install(base, dir, tmp, () => committed)
-      if (!committed)
-        sys.error(s"PQ artifact at $dir could not be installed")
-    }
-    lastPq = Some(dir.getAbsolutePath)
-    dir.toString
-  }
+    })
 
   /** Exact-cosine re-rank of an ADC shortlist: the raw embeddings are
     * read ONLY for the C shortlisted ids (broadcast semi-join pushes the
@@ -253,8 +230,7 @@ object PqOps {
     * shared core of `qIvfPqTopk` and its consistency spec. */
   def ivfPqShortlist(s: SparkSession, sf: String, qv: DataFrame,
       nprobe: Int, c: Int): DataFrame = {
-    val ivfDir = VectorOps.ensureTrainedIvf(s, sf)
-    VectorOps.recordTrainedDefault(ivfDir)
+    val ivfDir = ArtifactStore.record("ivf_trained", VectorOps.ensureTrainedIvf(s, sf))
     val pqDir = ensurePq(s, sf)
     val probed = s.read.parquet(s"$ivfDir/centroids").crossJoin(broadcast(qv))
       .select(col("label"), cosineFast(col("centroid"), col("qv")).as("cs"))

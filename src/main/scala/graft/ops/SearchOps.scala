@@ -93,8 +93,7 @@ object SearchOps {
   /** The ad-hoc BM25 path above tokenizes the corpus once per branch (tf,
     * df) — fine for a one-shot query, but a standing search workload builds
     * an INVERTED INDEX once and probes it. `ensureLexIndex` persists that
-    * index as a write-once artifact (same race-safe lifecycle as the IVF
-    * artifacts, now shared via `ArtifactStore`):
+    * index as a write-once `ArtifactStore` artifact:
     *   postings_pos/ (term, doc_id, dl, positions) — positional postings,
     *             range-partitioned AND sorted by term, so a probe's
     *             `term IN (...)` predicate pushes into the parquet scan and
@@ -212,33 +211,14 @@ object SearchOps {
     derivePostingsTables(s, outDir)
   }
 
-  /** Build-if-absent for the inverted-index artifact: content-fingerprint-
-    * named write-once dirs, `_GRAFT_OK` gating, lock-serialized install —
-    * the `ArtifactStore` lifecycle shared with the IVF artifacts. The
-    * fingerprint hashes the part files INSIDE the documents dataset (not
-    * the directory inode), so a regenerated corpus can never silently
-    * serve a stale index. */
-  def ensureLexIndex(s: SparkSession, sf: String): String = {
-    val base = new java.io.File("target/lex_index")
-    val src = new java.io.File(s"$sf/documents.parquet")
+  /** The persisted inverted index described above, one per documents
+    * fingerprint. */
+  def ensureLexIndex(s: SparkSession, sf: String): String =
     // v5: 512 KB row groups (pruned/parallel probes) + df/n_docs/avgdl
     // denormalized into postings (join-free probe) — layout changes only,
     // scores are bit-identical to v3
-    val fpTag = ArtifactStore.fingerprint(src, "v5")
-    val dir = new java.io.File(base,
-      "sf" + sf.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fpTag)
-    def committed = new java.io.File(dir, "_GRAFT_OK").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base,
-        s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
-      buildLexIndex(s, sf, tmp.toString)
-      new java.io.File(tmp, "_GRAFT_OK").createNewFile()
-      ArtifactStore.install(base, dir, tmp, () => committed)
-      if (!committed)
-        sys.error(s"lex index artifact at $dir could not be installed")
-    }
-    dir.toString
-  }
+    ArtifactStore.ensure("lex_index", ArtifactStore.sourceName(sf, "documents", "v5"))(
+      tmp => buildLexIndex(s, sf, tmp.toString))
 
   /** BM25 scores over the persisted inverted index: the probe reads ONLY
     * the query terms' posting lists (`term IN (...)` pushes into the sorted
@@ -851,28 +831,11 @@ object SearchOps {
       .sortWithinPartitions("w1", "w2"), s"$outDir/lm")
   }
 
-  /** Build-if-absent for the bigram-LM artifact — the ArtifactStore
-    * lifecycle shared with the lexical index / BPE / SQ8 artifacts:
-    * content-fingerprint-named write-once dir, `_GRAFT_OK` gating,
-    * lock-serialized install. A regenerated corpus maps to a new dir. */
-  def ensureBigramLm(s: SparkSession, sf: String): String = {
-    val base = new java.io.File("target/bigram_lm")
-    val src = new java.io.File(s"$sf/documents.parquet")
-    val fpTag = ArtifactStore.fingerprint(src, "lm-v1")
-    val dir = new java.io.File(base,
-      "sf" + sf.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fpTag)
-    def committed = new java.io.File(dir, "_GRAFT_OK").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base,
-        s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
-      buildBigramLm(s, sf, tmp.toString)
-      new java.io.File(tmp, "_GRAFT_OK").createNewFile()
-      ArtifactStore.install(base, dir, tmp, () => committed)
-      if (!committed)
-        sys.error(s"bigram LM artifact at $dir could not be installed")
-    }
-    dir.toString
-  }
+  /** The persisted bigram-LM table (`lm/`) the doc scores are taken
+    * against, one per documents fingerprint. */
+  def ensureBigramLm(s: SparkSession, sf: String): String =
+    ArtifactStore.ensure("bigram_lm", ArtifactStore.sourceName(sf, "documents", "lm-v1"))(
+      tmp => buildBigramLm(s, sf, tmp.toString))
 
   /** Per-doc add-one-smoothed bigram log-prob totals under the corpus's own
     * LM — the scoring core shared by [[qBigramLm]] (report face) and

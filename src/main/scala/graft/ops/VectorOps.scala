@@ -70,20 +70,14 @@ object VectorOps {
     * the symmetric signed grid with ONE global scale (see [[qSq8Topk]]),
     * and PERSISTED, 4× smaller than the float32 embeddings it stands in
     * for (int8 per dimension, bit-packed + zstd in parquet). Built at
-    * most once per corpus fingerprint (the IVF/PQ/BPE ArtifactStore
-    * lifecycle): before r13 every probe re-ran the normalize + max-scale
-    * + quantize passes over the whole corpus — exactly the work a code
-    * TABLE exists to amortize; a probe now scans codes only. */
-  def ensureSq8(s: SparkSession, sf: String): String = {
-    val base = new java.io.File("target/sq8_codes")
-    val src = new java.io.File(s"$sf/embeddings.parquet")
-    val fpTag = ArtifactStore.fingerprint(src, "sq8-v1")
-    val dir = new java.io.File(base,
-      "sf" + sf.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fpTag)
-    def committed = new java.io.File(dir, "_SUCCESS").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base,
-        s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
+    * most once per corpus fingerprint: before r13 every probe re-ran the
+    * normalize + max-scale + quantize passes over the whole corpus —
+    * exactly the work a code TABLE exists to amortize; a probe now scans
+    * codes only. Recorded as the oracle input "sq8_codes", so DuckDB
+    * replays the probe from the same persisted codes. */
+  def ensureSq8(s: SparkSession, sf: String): String =
+    ArtifactStore.record("sq8_codes", ArtifactStore.ensure("sq8_codes",
+        ArtifactStore.sourceName(sf, "embeddings", "sq8-v1")) { tmp =>
       val e = t(s, sf, "embeddings")
       val normed = e.select(col("vec_id"), col("label"), expr(
         """transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(
@@ -97,20 +91,7 @@ object VectorOps {
             |  round(x * 127.0D / ma, 0))) AS TINYINT))""".stripMargin).as("codes"))
         .write.mode("overwrite").option("compression", "zstd")
         .parquet(tmp.toString)
-      ArtifactStore.install(base, dir, tmp, () => committed)
-      if (!committed)
-        sys.error(s"SQ8 code artifact at $dir could not be installed")
-    }
-    lastSq8 = Some(dir.getAbsolutePath)
-    dir.toString
-  }
-
-  @volatile private var lastSq8: Option[String] = None
-
-  /** Absolute path of the most recently ensured SQ8 code artifact in this
-    * JVM — consumed by `SparkEntry.oracleSql` so DuckDB replays the probe
-    * from the same persisted codes (the IVF/BPE oracle pattern). */
-  def oracleSq8Path: Option[String] = lastSq8
+    })
 
   def qSq8Topk(s: SparkSession, sf: String): DataFrame = {
     val e = t(s, sf, "embeddings")
@@ -365,45 +346,13 @@ object VectorOps {
       .limit(k)
   }
 
-  /** Build-if-absent for the persisted centroid artifact. A CONTENT
-    * fingerprint of the source embeddings dataset (the part files'
-    * name/size/mtime — see ArtifactStore.fingerprint) is part of the
-    * directory NAME, making each artifact write-once: regenerated source data maps to
-    * a NEW directory, so a rebuild never deletes the directory a concurrent
-    * reader is serving from (stale-fingerprint dirs become inert garbage,
-    * not hazards). Spark's `_SUCCESS` commit marker still gates against
-    * interrupted writes; rebuilds land in a unique temp dir and are
-    * atomically renamed, and when two builders race, each rename installs a
-    * COMPLETE artifact and the loser's temp is dropped. The target dir is
-    * only deleted when it (still) lacks `_SUCCESS` — re-checked right
-    * before the delete, so a racing builder that committed while this one
-    * was writing its temp keeps its artifact and any reader already
-    * serving from it is undisturbed. */
-  def ensureCentroids(s: SparkSession, sf: String): String = {
-    val base = new java.io.File("target/ivf_centroids")
-    val src = new java.io.File(s"$sf/embeddings.parquet")
-    val fpTag = ArtifactStore.fingerprint(src, "v2")
-    // the "sf" prefix keeps the dir name from starting with "_": Spark's
-    // path filter treats _-prefixed names as hidden metadata and logs
-    // "All paths were ignored" on every read of such a root
-    val dir = new java.io.File(base,
-      "sf" + sf.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fpTag)
-    def committed = new java.io.File(dir, "_SUCCESS").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base,
-        s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
+  /** The persisted label-centroid table `q_ivf_topk` probes, keyed by a
+    * content fingerprint of the source embeddings. */
+  def ensureCentroids(s: SparkSession, sf: String): String =
+    ArtifactStore.ensure("ivf_centroids",
+      ArtifactStore.sourceName(sf, "embeddings", "v2")) { tmp =>
       writeCentroids(t(s, sf, "embeddings"), tmp.toString)
-      // the committed re-check, leftover delete and ATOMIC_MOVE run under
-      // the ArtifactStore install lock: a racing builder that commits
-      // first keeps its artifact (this one's tmp is dropped), and the
-      // delete can never yank a just-committed dir from under a reader
-      ArtifactStore.install(base, dir, tmp, () => committed)
-      // belt-and-braces: never hand out a directory that is not committed
-      if (!committed)
-        sys.error(s"IVF centroid artifact at $dir could not be installed")
     }
-    dir.toString
-  }
 
   private[graft] def deleteRecursively(f: java.io.File): Unit = if (f.exists()) {
     // listFiles is null when the dir vanished under a concurrent delete
@@ -471,8 +420,8 @@ object VectorOps {
   def qIvfTopkBatch(s: SparkSession, sf: String): DataFrame = {
     val e = t(s, sf, "embeddings")
     val nlist = adaptiveNlist(e.count())
-    val dir = ensureTrainedIvf(s, sf, nlist = nlist)
-    lastBatchTrained = Some(new java.io.File(dir).getAbsolutePath)
+    val dir = ArtifactStore.record("ivf_trained_batch",
+      ensureTrainedIvf(s, sf, nlist = nlist))
     val centroids = s.read.parquet(s"$dir/centroids")
     val assign = s.read.parquet(s"$dir/assign")
     val el = e.select(col("vec_id"), col("embedding")).join(assign, "vec_id")
@@ -494,31 +443,10 @@ object VectorOps {
     * + probed lists. */
   def qIvfTopk(s: SparkSession, sf: String): DataFrame = {
     val e = t(s, sf, "embeddings")
-    val path = ensureCentroids(s, sf)
-    lastCentroids = Some(new java.io.File(path).getAbsolutePath)
+    val path = ArtifactStore.record("ivf_centroids", ensureCentroids(s, sf))
     val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     ivfTopk(s.read.parquet(path), e, qv, nprobe = 3, k = 10)
   }
-
-  // Artifact locations recorded at query time for the DuckDB oracle replay
-  // (the BpeOps.oracleMergesPath pattern): the paths embed content
-  // fingerprints only known once the artifact exists; Verify runs every
-  // query before dumping oracle_sql.json, so they are always set by then.
-  @volatile private var lastCentroids: Option[String] = None
-  @volatile private var lastTrainedDefault: Option[String] = None
-  @volatile private var lastBatchTrained: Option[String] = None
-
-  /** Absolute path of the label-centroid artifact `q_ivf_topk` probed. */
-  def oracleCentroidsPath: Option[String] = lastCentroids
-  /** Absolute path of the default-nlist trained IVF artifact
-    * (`q_ivf_trained_topk`, `q_ivfpq_topk`). */
-  def oracleTrainedDefaultPath: Option[String] = lastTrainedDefault
-  /** Absolute path of the √N-nlist trained IVF artifact
-    * (`q_ivf_topk_batch`). */
-  def oracleBatchTrainedPath: Option[String] = lastBatchTrained
-
-  private[ops] def recordTrainedDefault(dir: String): Unit =
-    lastTrainedDefault = Some(new java.io.File(dir).getAbsolutePath)
 
   /** K-means-trained IVF for corpora that do NOT ship a pre-assigned list
     * column (the `label`-based build above serves pre-clustered data; real
@@ -587,23 +515,14 @@ object VectorOps {
       .groupBy("vec_id")
       .agg(max_by(col("label"), struct(col("cs"), -col("label"))).as("label"))
 
-  /** Build-if-absent for the TRAINED IVF artifact: `centroids/` and the
-    * final `assign/` (vec_id → list) under one fingerprint-named dir —
-    * the same write-once + recheck-before-delete discipline as
-    * `ensureCentroids`. The top-level `_GRAFT_OK` marker commits the PAIR
-    * of tables: each subdir's own `_SUCCESS` covers only that table, and a
-    * reader must never see committed centroids with absent assignments. */
+  /** The TRAINED IVF artifact: `centroids/` and the final `assign/`
+    * (vec_id → list) under one fingerprint-named dir. The one commit
+    * marker covers the PAIR of tables: a reader must never see committed
+    * centroids with absent assignments. */
   def ensureTrainedIvf(s: SparkSession, sf: String, nlist: Int = 16,
-      iters: Int = 2): String = {
-    val base = new java.io.File("target/ivf_trained")
-    val src = new java.io.File(s"$sf/embeddings.parquet")
-    val fpTag = ArtifactStore.fingerprint(src, s"$nlist:$iters:v3")
-    val dir = new java.io.File(base,
-      "sf" + sf.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + fpTag)
-    def committed = new java.io.File(dir, "_GRAFT_OK").exists()
-    if (!committed) {
-      val tmp = new java.io.File(base,
-        s"${dir.getName}.tmp.${java.util.UUID.randomUUID}")
+      iters: Int = 2): String =
+    ArtifactStore.ensure("ivf_trained",
+      ArtifactStore.sourceName(sf, "embeddings", s"$nlist:$iters:v3")) { tmp =>
       val (centroids, assign) =
         trainIvf(t(s, sf, "embeddings"), nlist, iters)
       assign.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -613,14 +532,7 @@ object VectorOps {
         .option("compression", "zstd")
         .parquet(new java.io.File(tmp, "centroids").toString)
       org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint(centroids)
-      new java.io.File(tmp, "_GRAFT_OK").createNewFile()
-      // committed re-check + delete + ATOMIC_MOVE under the install lock
-      ArtifactStore.install(base, dir, tmp, () => committed)
-      if (!committed)
-        sys.error(s"trained IVF artifact at $dir could not be installed")
     }
-    dir.toString
-  }
 
   /** Append a batch of new vectors to a TRAINED IVF artifact WITHOUT
     * retraining — the vector-side analog of `SearchOps.mergeLexIndex`.
@@ -648,7 +560,7 @@ object VectorOps {
     centroids.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("compression", "zstd")
       .parquet(new java.io.File(outDir, "centroids").toString)
-    new java.io.File(outDir, "_GRAFT_OK").createNewFile(): Unit
+    ArtifactStore.seal(new java.io.File(outDir))
   }
 
   /** ANN top-k over the TRAINED index: routing joins the persisted
@@ -659,8 +571,7 @@ object VectorOps {
     * deterministic. ScaleOpsSpec keeps assignment/centroid consistency,
     * exactness at nprobe = nlist, and recall vs brute force. */
   def qIvfTrainedTopk(s: SparkSession, sf: String): DataFrame = {
-    val dir = ensureTrainedIvf(s, sf)
-    recordTrainedDefault(dir)
+    val dir = ArtifactStore.record("ivf_trained", ensureTrainedIvf(s, sf))
     val centroids = s.read.parquet(s"$dir/centroids")
     val assign = s.read.parquet(s"$dir/assign")
     val e = t(s, sf, "embeddings").select(col("vec_id"), col("embedding"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType,
   StructField, StructType}
 
-import graft.ops.MergeOps
+import graft.ops.{ArtifactStore, MergeOps}
 
 /** Streaming incremental-aggregate maintenance — the X40 operator
   * (`MergeOps.qIncrAggMerge`) driven by Structured Streaming: each
@@ -23,7 +23,7 @@ import graft.ops.MergeOps
   * DedupStream/IndexStream artifact discipline, not
   * `mapGroupsWithState`): the partials table is key-count-sized and every
   * batch rewrites a full snapshot — that is a table, not per-key
-  * incremental state. Versioned `v<batchId>` dirs + a `_GRAFT_OK` marker
+  * incremental state. Versioned `v<batchId>` dirs + the `ArtifactStore` marker
   * make at-least-once `foreachBatch` retries idempotent: a retried batch
   * folds onto its TRUE PREDECESSOR (latest sealed version with id <
   * batchId) — never the global latest, which after a partial failure could
@@ -59,17 +59,11 @@ object AggStream {
   def currentAggregate(s: SparkSession, stateBase: String): DataFrame =
     MergeOps.finishPartials(currentPartials(s, stateBase))
 
-  /** Version dirs sort by NUMERIC id (lexicographic 'v100000' < 'v99999'
-    * would fold a long-running stream into a stale snapshot). */
   private def latestVersion(stateBase: String,
       beforeBatch: Long = Long.MaxValue): Option[String] =
-    Option(new java.io.File(stateBase).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("v") &&
-        f.getName.drop(1).forall(_.isDigit) &&
-        f.getName.drop(1).toLong < beforeBatch &&
-        new java.io.File(f, "_GRAFT_OK").exists())
-      .sortBy(_.getName.drop(1).toLong)
-      .lastOption.map(_.toString)
+    ArtifactStore.sealedDirs(stateBase, "v")
+      .filter(d => new java.io.File(d).getName.drop(1).toLong < beforeBatch)
+      .lastOption
 
   /** One micro-batch fold — package-visible so StreamingSpec can REPLAY a
     * batch id and prove the at-least-once retry contract directly. */
@@ -80,10 +74,10 @@ object AggStream {
     // its own version already sealed skips the rewrite outright — the
     // content is identical by construction (same delta folded onto the
     // same predecessor), and mode("overwrite") would transiently delete
-    // _GRAFT_OK, silently demoting a concurrent currentAggregate reader
+    // the marker, silently demoting a concurrent currentAggregate reader
     // to the predecessor snapshot during the rewrite window.
-    if (new java.io.File(new java.io.File(stateBase, f"v$batchId%05d"),
-        "_GRAFT_OK").exists()) return
+    val dir = new java.io.File(stateBase, f"v$batchId%05d")
+    if (ArtifactStore.isSealed(dir)) return
     val delta = MergeOps.aggPartial(batch)
     // fold onto the TRUE PREDECESSOR (latest version < batchId), not
     // the global latest: a retried batch may find its own sealed
@@ -96,9 +90,8 @@ object AggStream {
       delta.select(col("event_type"), col("n"),
         col("sv").cast(DecimalType(38, 6)).as("sv"),
         col("mn"), col("mx"))))
-    val dir = new java.io.File(stateBase, f"v$batchId%05d")
     next.write.mode("overwrite").parquet(dir.toString)
-    new java.io.File(dir, "_GRAFT_OK").createNewFile(): Unit
+    ArtifactStore.seal(dir)
   }
 
   /** Start the maintenance sink over a streaming frame of

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.ops.DedupOps
+import graft.ops.{ArtifactStore, DedupOps}
 
 /** Streaming dedup-cluster maintenance: near-dup PAIR batches arrive as a
   * stream (the output of any verify stage — minhash, prefix-filter,
@@ -22,7 +22,7 @@ import graft.ops.DedupOps
   * IndexStream artifact discipline, not `mapGroupsWithState`): component
   * labels are corpus-node-sized and every batch rewrites a full snapshot,
   * which is exactly a table, not per-key incremental state. Versioned
-  * directories named by batch id + a `_GRAFT_OK` marker give at-least-once
+  * directories named by batch id + the `ArtifactStore` marker give at-least-once
   * `foreachBatch` retries idempotent replace semantics: a retried batch
   * rebuilds `v<batchId>` from `v<batchId-…>`'s snapshot (its input state
   * is re-read, not mutated), and readers only ever see marker-complete
@@ -42,15 +42,8 @@ object DedupStream {
         java.util.Collections.emptyList[Row](), labelSchema)
     }
 
-  /** Numeric-id sort: lexicographic would order 'v100000' before 'v99999'
-    * and fold a long-running stream into a stale snapshot. */
   private def latestVersion(stateBase: String): Option[String] =
-    Option(new java.io.File(stateBase).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("v") &&
-        f.getName.drop(1).forall(_.isDigit) &&
-        new java.io.File(f, "_GRAFT_OK").exists())
-      .sortBy(_.getName.drop(1).toLong)
-      .lastOption.map(_.toString)
+    ArtifactStore.sealedDirs(stateBase, "v").lastOption
 
   /** Start the maintenance sink: each non-empty micro-batch of (src, dst)
     * pairs folds into the current snapshot and seals the next version. */
@@ -67,7 +60,7 @@ object DedupStream {
           val dir = new java.io.File(stateBase, f"v$batchId%05d")
           next.write.mode("overwrite").parquet(dir.toString)
           org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint(next)
-          new java.io.File(dir, "_GRAFT_OK").createNewFile(): Unit
+          ArtifactStore.seal(dir)
         }
       }
       .start()

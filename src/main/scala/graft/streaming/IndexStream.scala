@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.SearchOps
+import graft.ops.{ArtifactStore, SearchOps}
 
 /** Streaming construction of the inverted-index artifact: documents arrive
   * as a stream, each micro-batch is sealed as one complete mini-index
@@ -23,7 +23,7 @@ import graft.ops.SearchOps
   * Failure semantics: `foreachBatch` is at-least-once, so a retried batch
   * may rebuild its segment — safe because the segment directory is named
   * by the (stable) batch id, `buildLexIndexFrom` writes with Overwrite,
-  * and the `_GRAFT_OK` marker lands only after a complete build. Readers
+  * and the `ArtifactStore` marker lands only after a complete build. Readers
   * (`sealedSegments`) see a segment only once its marker exists.
   */
 object IndexStream {
@@ -40,18 +40,14 @@ object IndexStream {
         if (!batch.isEmpty) {
           val dir = new java.io.File(segBase, f"seg-$batchId%05d")
           SearchOps.buildLexIndexFrom(batch.toDF(), dir.toString)
-          new java.io.File(dir, "_GRAFT_OK").createNewFile(): Unit
+          ArtifactStore.seal(dir)
         }
       }
       .start()
 
-  /** Segments whose `_GRAFT_OK` marker has landed, in batch order. */
+  /** Segments whose commit marker has landed, in batch order. */
   def sealedSegments(segBase: String): Seq[String] =
-    Option(new java.io.File(segBase).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("seg-") &&
-        new java.io.File(f, "_GRAFT_OK").exists())
-      .sortBy(_.getName)
-      .map(_.toString).toSeq
+    ArtifactStore.sealedDirs(segBase, "seg-")
 
   /** Fold every sealed segment into one probe-ready index at `outDir`. */
   def compact(s: SparkSession, segBase: String, outDir: String): Unit =

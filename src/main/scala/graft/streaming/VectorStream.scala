@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.VectorOps
+import graft.ops.{ArtifactStore, VectorOps}
 
 /** Streaming face of `VectorOps.appendTrainedIvf`: embeddings arrive as a
   * stream, and each micro-batch is assigned against the FROZEN centroids
@@ -24,7 +24,7 @@ import graft.ops.VectorOps
   *
   * Failure semantics match `IndexStream.sealSegments`: at-least-once
   * `foreachBatch` retries rewrite the same batch-id-named directory
-  * (Overwrite) and the `_GRAFT_OK` marker lands last, so readers never
+  * (Overwrite) and the `ArtifactStore` marker lands last, so readers never
   * see a partial segment.
   */
 object VectorStream {
@@ -46,18 +46,14 @@ object VectorStream {
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .option("compression", "zstd")
             .parquet(new java.io.File(dir, "assign").toString)
-          new java.io.File(dir, "_GRAFT_OK").createNewFile(): Unit
+          ArtifactStore.seal(dir)
         }
       }
       .start()
 
   /** Sealed assignment segments under `segBase`, in batch order. */
   def sealedSegments(segBase: String): Seq[String] =
-    Option(new java.io.File(segBase).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("seg-") &&
-        new java.io.File(f, "_GRAFT_OK").exists())
-      .sortBy(_.getName)
-      .map(_.toString).toSeq
+    ArtifactStore.sealedDirs(segBase, "seg-")
 
   /** The probe-side assignment table: the trained artifact's base
     * assignment unioned with every sealed streaming segment. */

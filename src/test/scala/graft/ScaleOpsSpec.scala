@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ops.{SkewOps, Tables, VectorOps}
+import graft.ops.{ArtifactStore, SkewOps, Tables, VectorOps}
 
 /** Scale-pattern specs: SQL extension registration, salted aggregation
   * equivalence, IVF probing recall. */
@@ -280,19 +280,42 @@ class ScaleOpsSpec extends SparkTestBase {
     // the source fingerprint is part of the directory name: regenerated
     // source data maps to a NEW write-once dir, never a mutation of this one
     assert(dir.getName.matches("sf.*_[0-9a-f]{8}"), dir.getName)
-    assert(new java.io.File(dir, "_SUCCESS").exists())
+    assert(new java.io.File(dir, ArtifactStore.Marker).exists())
     val other = new java.io.File(VectorOps.ensureCentroids(spark, "/root/testdata/sf0.001"))
     assert(other.getName != dir.getName,
       "different source data must key a different artifact dir")
 
     // simulate a killed writer: part files present but no commit marker —
     // a bare directory-existence check would read this as-is
-    new java.io.File(dir, "_SUCCESS").delete()
+    new java.io.File(dir, ArtifactStore.Marker).delete()
     val rebuilt = new java.io.File(VectorOps.ensureCentroids(spark, sfDir))
     assert(rebuilt.getName == dir.getName)
-    assert(new java.io.File(rebuilt, "_SUCCESS").exists(),
+    assert(new java.io.File(rebuilt, ArtifactStore.Marker).exists(),
       "partial artifact was trusted instead of rebuilt")
     assert(VectorOps.qIvfTopk(spark, sfDir).count() == 10)
+  }
+
+  test("a failing artifact build leaves no tmp dir and no committed dir") {
+    val kind = "failing_build_spec"
+    val name = s"sf_${java.util.UUID.randomUUID}"
+    val base = new java.io.File("target", kind)
+    def leftovers = Option(base.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith(name))
+    val err = intercept[IllegalStateException] {
+      ArtifactStore.ensure(kind, name) { tmp =>
+        spark.range(3).write.parquet(tmp.toString)
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(err.getMessage == "build failed")
+    assert(leftovers.isEmpty, s"failed build left ${leftovers.mkString(", ")}")
+    // the next ensure builds from absent and commits
+    val dir = ArtifactStore.ensure(kind, name)(tmp =>
+      spark.range(3).write.parquet(tmp.toString))
+    assert(ArtifactStore.isSealed(new java.io.File(dir)))
+    assert(spark.read.parquet(dir).count() == 3)
+    assert(leftovers.map(_.getName) == Seq(name))
+    VectorOps.deleteRecursively(new java.io.File(dir))
   }
 
   test("trained IVF: consistent routing, exact at full probe, real recall") {
@@ -413,7 +436,7 @@ class ScaleOpsSpec extends SparkTestBase {
               start.await()
               try {
                 val d = VectorOps.ensureCentroids(spark, sfDir)
-                assert(new java.io.File(d, "_SUCCESS").exists())
+                assert(new java.io.File(d, ArtifactStore.Marker).exists())
                 assert(spark.read.parquet(d).count() > 0)
               } catch { case t: Throwable => failures.add(t): Unit }
             }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.SearchOps
+import graft.ops.{ArtifactStore, SearchOps}
 
 /** Lexical retrieval + statistical text models (X19-X22). Oracle parity is
   * the driver's job; these specs lock the ranking/model invariants that an
@@ -98,7 +98,7 @@ class SearchOpsSpec extends SparkTestBase {
       (1L, "a b a b", "en", "s0", 1L),
       (2L, "c d e f", "en", "s0", 1L)))
     val d1 = SearchOps.ensureBigramLm(spark, dir)
-    val marker = new java.io.File(d1, "_GRAFT_OK")
+    val marker = new java.io.File(d1, ArtifactStore.Marker)
     assert(marker.exists())
     val stamp = marker.lastModified()
     val before = SearchOps.qBigramLm(spark, dir).collect()
@@ -154,7 +154,7 @@ class SearchOpsSpec extends SparkTestBase {
 
   test("bm25 index: second ensure call reuses the committed artifact") {
     val d1 = SearchOps.ensureLexIndex(spark, sf)
-    val marker = new java.io.File(d1, "_GRAFT_OK")
+    val marker = new java.io.File(d1, ArtifactStore.Marker)
     assert(marker.exists())
     val stamp = marker.lastModified()
     val d2 = SearchOps.ensureLexIndex(spark, sf)
