@@ -1,59 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times the headline queries over SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Failed queries are recorded as -1.0 and excluded
   * from the total (they are failures, not timings). */
 object Bench {
 
-  /** Headline subset — the expensive/representative operators; the full map
-    * is exercised by Verify, correctness is not re-checked here. */
-  val headline: Seq[String] = Seq(
-    "q_agg_groupby", "q_join_orders_customer", "q_topk", "q_filter_numeric",
-    "q_window_rank", "q_month_groupby", "q_distinct", "q_count_distinct",
-    "q_tumbling_window", "q_session_like_gap", "q_chunk_rows", "q_text_tokens",
-    "q_cosine_topk", "q_embed_neardup_pairs", "q_minhash_neardup",
-    "q_ngram_jaccard_pairs", "q_salted_agg", "q_ivf_topk", "q_ivf_topk_batch",
-    "q_join3_revenue",
-    "q_repetition", "q_asof_join", "q_asof_join_blocked", "q_range_join_windows",
-    "q_upsert_merge", "q_quality_filter", "q_dedup_clusters",
-    "q_bm25_topk", "q_bm25_index_topk", "q_bm25_batch",
-    "q_hybrid_rrf", "q_hybrid_rrf_index", "q_bigram_lm",
-    "q_phrase_match", "q_phrase_match_index", "q_phrase_match3",
-    "q_tfidf_keywords", "q_pack_sequences", "q_ivf_trained_topk",
-    "q_rm3_expansion", "q_rm3_rescore",
-    "q_semantic_dedup", "q_dup_ngram_spans", "q_funnel_steps",
-    "q_pq_topk", "q_ivfpq_topk", "q_curation_funnel", "q_scd2_history",
-    "q_source_cap", "q_mixture_weights", "q_shard_assign",
-    "q_hard_negatives", "q_label_centroids", "q_perplexity_filter",
-    "q_mixture_draw", "q_heavy_hitters", "q_heavy_hitters_mg", "q_pruned_scan",
-    "q_pruned_scan_rule", "q_salted_join",
-    "q_cube", "q_full_outer", "q_rolling_window", "q_hopping_window",
-    "q_topk_per_type", "q_incr_agg_merge",
-    "q_resample_ffill", "q_table_checksum", "q_percent_rank",
-    "q_session_window", "q_event_transitions", "q_retention_cohorts",
-    "q_unpivot", "q_regex_funcs", "q_array_funcs",
-    "q_mode_median", "q_ntile", "q_above_avg", "q_arg_max",
-    "q_event_runs", "q_mad_outliers", "q_hll_union",
-    "q_class_balance", "q_bpe_merges",
-    "q_snapshot_diff", "q_expectations", "q_ohlc_bars",
-    // round 11 additions
-    "q_fuzzy_join", "q_pmi_collocations", "q_window_distinct_sketch",
-    "q_dedup_clusters_incremental", "q_drop_reasons", "q_media_decode",
-    "q_approx_percentiles",
-    // round 12 additions
-    "q_cm_sketch", "q_retrieval_metrics", "q_zorder_values", "q_sq8_topk",
-    "q_cm_join_est", "q_skew_profile",
-    // round 13 additions
-    "q_planned_skew_join", "q_group_split", "q_token_budget_cap",
-    // round 14 additions
-    "q_planned_skew_agg",
-    // round 15 additions (the network faces stay out of the headline —
-    // they are loopback-IO-bound by design, not engine work)
-    "q_embed_delta_refresh",
-    // round 16 additions
-    "q_dedup_spans")
+  /** Headline subset — the expensive/representative operators, flagged
+    * in `SparkEntry.specs`; the full registry is exercised by Verify,
+    * correctness is not re-checked here. */
+  val headline: Seq[String] = SparkEntry.specs.filter(_.headline).map(_.name)
 
   /** Force FULL materialization. A plain `df.count()` re-plans and lets
     * Catalyst prune unconsumed projections (and whole Window nodes), so a
@@ -130,7 +88,7 @@ object Bench {
     val warmSf = "/root/testdata/sf0.001"
     run.foreach { name =>
       try force(SparkEntry.queries(name)(spark, warmSf))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     // median of N runs per query: a single run moved 41% between identical
@@ -145,14 +103,13 @@ object Bench {
     // repeats of the same query hand its whole sample to a single GC/JIT
     // episode, which is exactly how a 12 s spread landed on a 3 s query.
     val runsPerQuery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val fns = headline.map(n => n -> SparkEntry.queries(n)).toMap
     def timedOne(name: String): Option[Double] = {
       val t0 = System.nanoTime()
       try {
-        force(fns(name)(spark, sfDir))
+        force(SparkEntry.queries(name)(spark, sfDir))
         Some((System.nanoTime() - t0) / 1e9)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           None
       }
@@ -179,7 +136,7 @@ object Bench {
       "bigram_lm" -> (() => SearchOps.ensureBigramLm(spark, sfDir)))
     artifacts.foreach { case (name, ensure) =>
       try ensure(): Unit
-      catch { case scala.util.control.NonFatal(e) =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] artifact $name FAILED: ${e.getMessage}")
         throw e
       }
@@ -187,7 +144,8 @@ object Bench {
     // untimed warmup pass at the TARGET sf: first-touch page cache, JIT at
     // the real data shapes — doubles as the round-robin's pass 0
     run.foreach { name =>
-      try force(fns(name)(spark, sfDir)) catch { case _: Throwable => () }
+      try force(SparkEntry.queries(name)(spark, sfDir))
+      catch { case NonFatal(_) => () }
     }
     val sentinel = new Sentinel(spark)
     val sentinelStart = sentinel.time()

@@ -139,7 +139,7 @@ object ArtifactStore {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Record artifact `dir` as the oracle input `name` (absolute path, for
-    * `SparkEntry.oracleSql`); returns `dir`. */
+    * the replayed oracles in `SparkEntry.specs`); returns `dir`. */
   def record(name: String, dir: String): String = {
     oracleInputs.put(name, new java.io.File(dir).getAbsolutePath)
     dir

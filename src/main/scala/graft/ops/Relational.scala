@@ -9,7 +9,7 @@ import Tables._
   * prompts (router rules `langgraph_pipeline.py:306-315`, SQL instructions
   * `:461-492`) plus the natively-implemented scan/union/join/limit paths
   * (`duckdb_util.py:166-225`). Each method is a `(SparkSession, sfDir) =>
-  * DataFrame` wired into `SparkEntry.queries` with a DuckDB oracle.
+  * DataFrame` registered in `SparkEntry.specs` with a DuckDB oracle.
   *
   * Scale notes: every query is fully declarative (Catalyst pushes filters and
   * prunes columns into the parquet scan); top-k lowers to

@@ -6,6 +6,7 @@ import graft.ops.CatalogOps.TableEntry
 import graft.ops.Tables
 import graft.planner.PlannerHooks
 import graft.planner.PlannerHooks._
+import scala.util.control.NonFatal
 
 /** The query lifecycle — the deterministic Spark rebuild of
   * `run_rag_pipeline` (`langgraph_pipeline.py:755-851`, flow in SURVEY
@@ -86,7 +87,7 @@ object QueryPipeline {
       val (tables, _) = hooks.identifier.identify(sub, catalog)
       val intent =
         try hooks.router.route(sub)
-        catch { case _: Throwable => SqlQuery } // reference fallback :346-349
+        catch { case NonFatal(_) => SqlQuery } // reference fallback :346-349
       // Execution is FORCED inside this try: Spark analyzes lazily, so a
       // sub-query that passes analysis can still fail at runtime (ANSI
       // cast/overflow errors — Spark 4 default). The reference's degrade
@@ -140,7 +141,7 @@ object QueryPipeline {
         SubResult(sub, intentOut, tables, df, err,
           df.queryExecution.toRdd.count(), grounding)
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           SubResult(sub, intent, tables,
             errorFrame(spark, e.getMessage), Some(e.getClass.getSimpleName), 1L)
       }

@@ -566,7 +566,7 @@ class FuzzGrammarSpec extends SparkTestBase {
           s"FROM $from WHERE o_orderdate BETWEEN DATE '1994-01-01' AND " +
           s"DATE '1996-12-31' GROUP BY c_mktsegment ORDER BY c_mktsegment ASC"),
       // join chain × HAVING (the q_nl_having_group driver face — must stay
-      // in lockstep with SparkEntry.oracleSql)
+      // in lockstep with its oracle in SparkEntry.specs)
       ("how many orders and customer per orderstatus having count over 100",
         s"SELECT o_orderstatus, count(*) AS n FROM $from " +
           s"GROUP BY o_orderstatus HAVING count(*) > 100 " +
@@ -631,8 +631,8 @@ class FuzzGrammarSpec extends SparkTestBase {
         s"SELECT c_mktsegment, SUM(o_totalprice) AS sum_o_totalprice " +
           s"FROM $from GROUP BY c_mktsegment " +
           s"ORDER BY sum_o_totalprice DESC, c_mktsegment ASC LIMIT 2"),
-      // the two remaining q_nl_* driver faces (SparkEntry): these strings
-      // must stay in lockstep with their oracleSql entries
+      // the two remaining q_nl_* driver faces: these strings must stay in
+      // lockstep with their oracles in SparkEntry.specs
       ("highest totalprice per mktsegment for orders and customer " +
         "where acctbal over 1000",
         s"SELECT c_mktsegment, MAX(o_totalprice) AS max_o_totalprice " +

@@ -322,10 +322,12 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("contract consistency: every oracle key is a wired query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
-    assert(SparkEntry.queries.size >= 95)
-    assert(SparkEntry.oracleSql.size >= 85)
+    // oracle keys are wired by construction (both maps derive from
+    // SparkEntry.specs); the exact counts pin the registry and catch a
+    // duplicated face name, which the derived maps would silently collapse
+    assert(SparkEntry.specs.size == 179)
+    assert(SparkEntry.queries.size == 179)
+    assert(Bench.headline.size == 106)
   }
 
   test("query functions never run jobs during construction") {

@@ -345,6 +345,31 @@ class QueryPipelineSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.ansi.enabled", prevAnsi)
   }
 
+  test("a router that throws falls back to SqlQuery") {
+    object BrokenRouter extends PlannerHooks.IntentRouter {
+      def route(q: String): PlannerHooks.Intent = throw new RuntimeException("router down")
+    }
+    val catalog = Seq(CatalogOps.profileTable(spark, sf, "customer"))
+    val ans = QueryPipeline.run(spark, "count per segment", catalog,
+      QueryPipeline.Hooks(router = BrokenRouter, sqlGen = CannedSqlGen))
+    val r = ans.subResults.head
+    assert(r.intent == PlannerHooks.SqlQuery && r.error.isEmpty)
+    assert(r.rowCount > 0)
+  }
+
+  test("an interrupted router propagates out of QueryPipeline.run") {
+    // degrade-don't-crash covers non-fatal failures only: a cancelled
+    // caller must see the interrupt, not an error frame or a fallback route
+    object InterruptedRouter extends PlannerHooks.IntentRouter {
+      def route(q: String): PlannerHooks.Intent = throw new InterruptedException("cancelled")
+    }
+    val catalog = Seq(CatalogOps.profileTable(spark, sf, "customer"))
+    intercept[InterruptedException] {
+      QueryPipeline.run(spark, "count per segment", catalog,
+        QueryPipeline.Hooks(router = InterruptedRouter, sqlGen = CannedSqlGen))
+    }
+  }
+
   test("grounding: edit distance counts adjacent transposition as one edit") {
     import graft.planner.Grounding
     assert(Grounding.editDistance("jhon", "john") == 1)
