@@ -46,7 +46,7 @@ object BenchIngest {
       val staged = new java.io.File(inputsDir, s"${table}_0.csv")
       if (!staged.exists()) {
         val tmp = new java.io.File(base, s"csv_tmp_$table")
-        spark.read.parquet(s"$sfDir/$table.parquet")
+        graft.ops.Tables.t(spark, sfDir, table)
           .coalesce(1)
           .write.mode("overwrite").option("header", "true").csv(tmp.toString)
         val part = tmp.listFiles().find(_.getName.endsWith(".csv"))

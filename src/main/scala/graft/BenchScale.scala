@@ -42,7 +42,7 @@ object BenchScale {
 
   private def build(spark: SparkSession, sfDir: String, mult: Int,
       out: String): Unit = {
-    def rd(n: String) = spark.read.parquet(s"$sfDir/$n.parquet")
+    def rd(n: String) = graft.ops.Tables.read(spark, s"$sfDir/$n.parquet")
     def wr(df: DataFrame, n: String): Unit =
       df.write.mode("overwrite").parquet(s"$out/$n.parquet")
 
@@ -66,8 +66,7 @@ object BenchScale {
     // reading via Tables.events and writing back would instead pin one
     // on-disk type. user_id and ts are kept per replica: scale = more
     // events per user per window.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
+    val events = graft.ops.Tables.rawEvents(spark, s"$sfDir/events.parquet")
     val espan = events.agg(max("event_id")).head.getLong(0) + 1
     wr(replicate(events, mult)((d, i) =>
       d.withColumn("event_id", col("event_id") + i * espan)), "events")

@@ -2110,8 +2110,7 @@ object SparkEntry {
   private def nlQueryOn(tables: Seq[String], question: String)(
       s: SparkSession, sfDir: String): DataFrame = {
     val catalog = tables.map(CatalogOps.profileTable(s, sfDir, _))
-    catalog.foreach(e =>
-      s.read.parquet(e.parquetPath).createOrReplaceTempView(e.logicalName))
+    graft.pipeline.QueryPipeline.registerViews(s, catalog)
     val text = catalog.map(_.describe).mkString("\n")
     s.sql(graft.planner.TemplateSqlGenerator.generate(question, text)
       .getOrElse(sys.error(s"template generator returned no SQL for: $question")))

@@ -152,7 +152,7 @@ object BpeOps {
     * read), because the merges parameterize the encode expression chain. */
   def loadMerges(s: SparkSession, sf: String,
       nMerges: Int = 20): Seq[(Int, String, String, Long)] =
-    s.read.parquet(ensureBpe(s, sf, nMerges))
+    read(s, ensureBpe(s, sf, nMerges))
       .orderBy("rank").collect()
       .map(r => (r.getAs[Long]("rank").toInt, r.getAs[String]("left"),
         r.getAs[String]("right"), r.getAs[Long]("n"))).toSeq
@@ -166,7 +166,7 @@ object BpeOps {
     * so the iterative argmax IS SQL-expressible after all; BpeSpec
     * additionally pins the loop to the in-memory reference impl. */
   def qBpeMerges(s: SparkSession, sf: String): DataFrame =
-    s.read.parquet(ensureBpe(s, sf, 20))
+    read(s, ensureBpe(s, sf, 20))
       .select(col("rank"), col("left"), col("right"),
         concat(col("left"), col("right")).as("merged"), col("n"))
       .orderBy("rank")

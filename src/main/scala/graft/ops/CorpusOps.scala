@@ -225,18 +225,13 @@ object CorpusOps {
       .parquet(s"$outDir/stages")
   }
 
-  private val stagesSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "doc_id BIGINT, source STRING, n_chars BIGINT, dedup_keep BOOLEAN, " +
-      "contaminated BOOLEAN, quality_pass BOOLEAN")
-
   def ensureCurationStages(s: SparkSession, sf: String): String =
     ArtifactStore.ensure("curation_stages",
       ArtifactStore.sourceName(sf, "documents", "cur-v1"))(
       tmp => buildCurationStages(s, sf, tmp.toString))
 
   private def curationStages(s: SparkSession, sf: String): DataFrame =
-    s.read.schema(stagesSchema)
-      .parquet(s"${ensureCurationStages(s, sf)}/stages")
+    read(s, s"${ensureCurationStages(s, sf)}/stages")
 
   /** Benchmark decontamination — the eval-set overlap check a training
     * corpus runs before release: flag every corpus document sharing ANY

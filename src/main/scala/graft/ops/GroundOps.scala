@@ -43,7 +43,7 @@ object GroundOps {
   def ensureGroundCollection(s: SparkSession, sf: String): String =
     ArtifactStore.record("nl_ground", ArtifactStore.ensure("nl_ground",
         ArtifactStore.sourceName(sf, "nation", s"nlground-v1:$question")) { tmp =>
-      val df = s.read.parquet(s"$sf/nation.parquet")
+      val df = Tables.t(s, sf, "nation")
       val chunks = IngestionPipeline.chunkTable(df, df.columns.head, budget = 1000)
       chunks
         .withColumn("embedding", IngestionPipeline.stubEmbed(dim)(col("text")))
@@ -76,7 +76,7 @@ object GroundOps {
       case None =>
         // empty corpus (the empty-input contract): nothing retrieved →
         // nothing grounded → an empty frame in the face's exact shape
-        s.read.parquet(s"$sf/nation.parquet").limit(0)
+        Tables.t(s, sf, "nation").limit(0)
           .withColumn("chunk_id", lit(0L))
           .withColumn("score_e6", lit(0L))
           .withColumn("grounded_value", lit(""))

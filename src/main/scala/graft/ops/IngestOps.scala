@@ -24,7 +24,7 @@ object IngestOps {
       else if (lower.endsWith(".json"))
         spark.read.option("multiLine", "true").json(path)
       else if (lower.endsWith(".parquet"))
-        spark.read.parquet(path)
+        spark.read.parquet(path) // an outside input, read once: no schema to reuse
       else if (lower.endsWith(".orc"))
         spark.read.orc(path)
       else if (lower.endsWith(".xlsx"))
@@ -70,7 +70,7 @@ object IngestOps {
       s.read.option("header", "true").option("inferSchema", "true")
         .csv(s"$work/orders_csv"))
     writeParquetZstd(csvBack, s"$work/orders_pq")
-    s.read.parquet(s"$work/orders_pq").agg(
+    read(s, s"$work/orders_pq").agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey").cast("long")).as("sum_key"),
       dsum(col("o_totalprice"), 2).as("sum_price"),
@@ -89,7 +89,7 @@ object IngestOps {
       s.read.option("header", "true").option("inferSchema", "true")
         .option("sep", "\t").csv(s"$work/orders_tsv"))
     writeParquetZstd(back, s"$work/orders_pq")
-    s.read.parquet(s"$work/orders_pq").agg(
+    read(s, s"$work/orders_pq").agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey").cast("long")).as("sum_key"),
       dsum(col("o_totalprice"), 2).as("sum_price"),
@@ -108,7 +108,7 @@ object IngestOps {
     // write; on non-empty data it matches what inference produces
     val back = CleanColumns(s.read.schema(out.schema).json(s"$work/orders_json"))
     writeParquetZstd(back, s"$work/orders_pq")
-    s.read.parquet(s"$work/orders_pq").agg(
+    read(s, s"$work/orders_pq").agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey").cast("long")).as("sum_key"),
       dsum(col("o_totalprice"), 2).as("sum_price"),
@@ -136,7 +136,7 @@ object IngestOps {
     // by OpsSpec's readAny dispatch test on real files)
     val back = CleanColumns(s.read.schema(src.schema).orc(s"$work/orders_orc"))
     writeParquetZstd(back, s"$work/orders_pq")
-    s.read.parquet(s"$work/orders_pq").agg(
+    read(s, s"$work/orders_pq").agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey").cast("long")).as("sum_key"),
       dsum(col("o_totalprice"), 2).as("sum_price"),
@@ -166,7 +166,7 @@ object IngestOps {
     * pass over file metadata — turn it on per read for append-mode tables,
     * not globally. */
   def readEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
+    spark.read.option("mergeSchema", "true").parquet(path) // not Tables.read: merges every footer
 
   /** Small-file compaction: rewrite a parquet directory into
     * ceil(totalBytes / targetFileBytes) files. Streaming and incremental
@@ -181,7 +181,7 @@ object IngestOps {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read.parquet(srcDir)
+    read(spark, srcDir)
       .repartition(nFiles)
       .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(dstDir)
     nFiles
@@ -210,8 +210,8 @@ object IngestOps {
       s"_${java.lang.ProcessHandle.current.pid}"
     val docs = t(s, sf, "documents")
     writePartitioned(docs, work, Seq("lang"), maxRecordsPerFile = 100000)
-    // explicit schema (incl. the partition column): an empty table writes
-    // no partition dirs, so schema inference has nothing to read
+    // explicit schema (incl. the partition column), not Tables.read: an
+    // empty table writes no partition dirs, so inference has nothing to read
     s.read.schema(docs.schema).parquet(work)
       .groupBy("lang")
       .agg(

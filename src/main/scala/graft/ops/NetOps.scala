@@ -202,6 +202,6 @@ object NetOps {
     val url = LoopbackHttp.blobUrl(s"agg_${tag(sf)}.parquet")
     graft.sources.BlobSink.uploadPut(part.toString, url)
     val local = graft.sources.UrlSource.download(url, s"$work/back")
-    s.read.parquet(local).orderBy("o_orderstatus")
+    read(s, local).orderBy("o_orderstatus")
   }
 }

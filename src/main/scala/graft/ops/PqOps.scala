@@ -189,7 +189,7 @@ object PqOps {
       books.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd")
         .parquet(new java.io.File(tmp, "codebooks").toString)
-      encodePq(e, s.read.parquet(new java.io.File(tmp, "codebooks").toString))
+      encodePq(e, read(s, new java.io.File(tmp, "codebooks").toString))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd")
         .parquet(new java.io.File(tmp, "codes").toString)
@@ -216,8 +216,8 @@ object PqOps {
     * checks recall vs the exact cosine ranking. */
   def qPqTopk(s: SparkSession, sf: String): DataFrame = {
     val dir = ensurePq(s, sf)
-    val books = s.read.parquet(s"$dir/codebooks")
-    val codes = s.read.parquet(s"$dir/codes")
+    val books = read(s, s"$dir/codebooks")
+    val codes = read(s, s"$dir/codes")
     val qv = t(s, sf, "embeddings").filter(col("vec_id") === 0)
       .select(col("embedding").as("qv"))
     val short = adcScores(codes, adcTable(books, qv))
@@ -232,15 +232,15 @@ object PqOps {
       nprobe: Int, c: Int): DataFrame = {
     val ivfDir = ArtifactStore.record("ivf_trained", VectorOps.ensureTrainedIvf(s, sf))
     val pqDir = ensurePq(s, sf)
-    val probed = s.read.parquet(s"$ivfDir/centroids").crossJoin(broadcast(qv))
+    val probed = read(s, s"$ivfDir/centroids").crossJoin(broadcast(qv))
       .select(col("label"), cosineFast(col("centroid"), col("qv")).as("cs"))
       .orderBy(col("cs").desc, col("label").asc).limit(nprobe)
       .select("label")
-    val cand = s.read.parquet(s"$pqDir/codes")
-      .join(s.read.parquet(s"$ivfDir/assign"), Seq("vec_id"))
+    val cand = read(s, s"$pqDir/codes")
+      .join(read(s, s"$ivfDir/assign"), Seq("vec_id"))
       .join(broadcast(probed), Seq("label"))
       .select("vec_id", "codes")
-    adcScores(cand, adcTable(s.read.parquet(s"$pqDir/codebooks"), qv))
+    adcScores(cand, adcTable(read(s, s"$pqDir/codebooks"), qv))
       .orderBy(col("adc_d2_e6").asc, col("vec_id").asc)
       .limit(c)
   }

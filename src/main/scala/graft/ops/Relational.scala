@@ -26,7 +26,7 @@ object Relational {
     * (`duckdb_util.py:166-172`). Same file listed twice ⇒ every key seen 2×. */
   def qMultifileScan(s: SparkSession, sf: String): DataFrame = {
     val p = s"$sf/customer.parquet"
-    s.read.parquet(p, p)
+    s.read.parquet(p, p) // two paths on purpose: Tables.read takes one
       .groupBy("c_custkey").agg(count(lit(1)).as("n_copies"))
       .orderBy("c_custkey")
   }

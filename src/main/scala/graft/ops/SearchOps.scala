@@ -164,8 +164,8 @@ object SearchOps {
     * are RE-derived here from the merged postings_pos + merged stats,
     * never unioned from per-segment values. */
   private def derivePostingsTables(s: SparkSession, outDir: String): Unit = {
-    val backPos = s.read.parquet(s"$outDir/postings_pos")
-    val stats = s.read.parquet(s"$outDir/stats")
+    val backPos = read(s, s"$outDir/postings_pos")
+    val stats = read(s, s"$outDir/stats")
       .select(col("n_docs"), col("avgdl"))
     val tfRows = backPos
       .select(col("term"), col("doc_id"), col("dl"),
@@ -196,13 +196,13 @@ object SearchOps {
     * periodically (compaction discipline as in IngestOps.compact). */
   def mergeLexIndex(s: SparkSession, segDirs: Seq[String], outDir: String): Unit = {
     require(segDirs.nonEmpty, "mergeLexIndex: no segments")
-    val pos = segDirs.map(d => s.read.parquet(s"$d/postings_pos"))
+    val pos = segDirs.map(d => read(s, s"$d/postings_pos"))
       .reduce(_.unionByName(_))
     zstd(pos.repartitionByRange(col("term"))
       .sortWithinPartitions("term", "doc_id"), s"$outDir/postings_pos")
     // stats FIRST: derivePostingsTables denormalizes the merged
     // n_docs/avgdl into the postings rows, so it reads this table
-    val st = segDirs.map(d => s.read.parquet(s"$d/stats"))
+    val st = segDirs.map(d => read(s, s"$d/stats"))
       .reduce(_.unionByName(_))
     zstd(st.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
       .select(col("n_docs"),
@@ -236,26 +236,6 @@ object SearchOps {
     * (`term IN (...)` pushes into the term-sorted parquet scan), the tiny
     * per-term df rows and 1-row stats broadcast. Bit-identical per-term
     * scores to `bm25PerTerm` (same counts, same arithmetic). */
-  /** Pinned layouts of the probe-path index tables: schema inference costs
-    * one footer-read JOB per table per query (measured 0.3 s of
-    * `q_retrievalMetrics`' fixed latency) — the layout is this file's own
-    * write contract, so probes declare it instead of re-discovering it. */
-  private val postingsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("term",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dl",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("tf",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("df",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("n_docs",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("avgdl",
-      org.apache.spark.sql.types.DoubleType)))
-
   private def bm25IndexPerTerm(s: SparkSession, dir: String,
       terms: Seq[String]): DataFrame = {
     // wide IN lists (the retrieval-eval shape, ~300 terms) read as K
@@ -269,8 +249,8 @@ object SearchOps {
     // ONE relation, filtered per chunk — each union branch still plans its
     // own scan with its own pushed range+IN predicates, but the driver
     // builds ONE file index / schema resolution instead of K (r18: the
-    // K=8 separate read.parquet calls were pure per-call driver latency)
-    val base = s.read.schema(postingsSchema).parquet(s"$dir/postings")
+    // K=8 separate reads were pure per-call driver latency)
+    val base = read(s, s"$dir/postings")
     def scanChunk(ch: Seq[String]) =
       base.filter(col("term") >= ch.head && col("term") <= ch.last &&
         col("term").isin(ch: _*))
@@ -390,20 +370,8 @@ object SearchOps {
     // preserved — a repeated query token scores twice, the oracle's
     // unnest semantics) feeds BOTH the literal `term IN` pushdown and the
     // broadcast query frame as a LocalRelation, so the main plan touches
-    // ONLY index tables — no second corpus tokenization. The documents
-    // schema is pinned: inference would spend a footer-read job per call.
-    val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("lang",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("source",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_chars",
-        org.apache.spark.sql.types.LongType)))
-    val qPairs = s.read.schema(docsSchema).parquet(s"$sf/documents.parquet")
+    // ONLY index tables — no second corpus tokenization.
+    val qPairs = t(s, sf, "documents")
       .filter(col("doc_id") < 100)
       .select(col("doc_id").as("query_id"),
         explode(slice(toks(col("text")), 1, 3)).as("term"))
@@ -508,23 +476,9 @@ object SearchOps {
     * Zero corpus-sized work at query time; doc→source attribution is one
     * equi-join against the documents table, keyed on doc_id. Shares
     * `q_phrase_match`'s oracle (an independent LIKE formulation). */
-  /** Pinned layout of `postings_pos` — same rationale as
-    * [[postingsSchema]]: schema inference costs a footer read per call on
-    * the probe path, and the layout is this file's own write contract. */
-  private val postingsPosSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("term",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dl",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("positions",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.IntegerType))))
-
   def phraseMatchIndexDocs(s: SparkSession, sf: String, ph: Seq[String]): DataFrame = {
     val dir = ensureLexIndex(s, sf)
-    val pp = s.read.schema(postingsPosSchema).parquet(s"$dir/postings_pos")
+    val pp = read(s, s"$dir/postings_pos")
     def listsOf(term: String, as: String) =
       pp.filter(col("term") === term).select(col("doc_id"), col("positions").as(as))
     val seed = listsOf(ph.head, "ps")
@@ -794,16 +748,6 @@ object SearchOps {
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
 
-  /** Pinned layout of the LM artifact (schema inference costs a footer-read
-    * job per query — see postingsSchema). */
-  private val lmSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("w1",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("w2",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("lp_e6",
-      org.apache.spark.sql.types.LongType)))
-
   /** X22 LM training, persisted: exact add-one-smoothed bigram log-probs
     * ln((c(w1,w2)+1)/(c(w1)+V)) DENORMALIZED to one row per distinct
     * (w1,w2) with the micro-int log-prob precomputed — the
@@ -847,7 +791,7 @@ object SearchOps {
     * exact). */
   private def bigramDocLp(s: SparkSession, sf: String): DataFrame = {
     val dir = ensureBigramLm(s, sf)
-    val lm = s.read.schema(lmSchema).parquet(s"$dir/lm")
+    val lm = read(s, s"$dir/lm")
     explodeBigrams(tWide(s, sf, "documents"))
       .join(lm, Seq("w1", "w2"))
       .groupBy("doc_id")

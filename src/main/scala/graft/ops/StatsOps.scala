@@ -97,6 +97,7 @@ object StatsOps {
         !(col("col_max") < lit(lo) || col("col_min") > lit(hi)))
       .select("file").collect().map(_.getString(0))
     val total = stats.count().toInt
+    // not Tables.read: the scan is a pruned file list (or its empty stand-in)
     val df =
       if (keep.isEmpty) spark.read.parquet(dir).limit(0)
       else spark.read.parquet(keep: _*)
@@ -158,14 +159,14 @@ object StatsOps {
   /** X37's rule face, as BENCH evidence for the optimizer-level path: the
     * SAME staged layout and the SAME filter+agg as [[qPrunedScan]], but
     * pruning happens inside `StatsPruneRule` against the registered
-    * footer index — the query itself is a PLAIN `spark.read.parquet` +
-    * filter, the way a user (or `Tables.t`) would write it, with no
+    * footer index — the query itself is a PLAIN `Tables.read` + filter,
+    * the way any operator would write it, with no
     * opt-in call at the scan site. Shares q_pruned_scan's oracle (the
     * unpartitioned original): the rewrite must be invisible in the
     * result; PlanSpec separately asserts the file-list reduction. */
   def qPrunedScanRule(s: SparkSession, sf: String): DataFrame = {
     val work = stagedShipdateLayout(s, sf)
     graft.plans.StatsPruneRule.registerIndex(s, work, "l_shipdate")
-    shipdateWindowAgg(s.read.parquet(work))
+    shipdateWindowAgg(read(s, work))
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table access + numeric-determinism helpers shared by every operator.
   *
@@ -12,32 +12,43 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Tables {
 
-  /** Read one logical table. Scans returned here (like any other scan of
-    * the same directory) participate in plan-level file skipping once a
-    * footer-stats index is registered for that directory via
+  /** Schema per dataset path, tagged with the [[ArtifactStore.fingerprint]]
+    * of the dataset it was inferred from. */
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  /** Read one parquet dataset (a file or a Spark-written directory) — the
+    * engine's one parquet read path. Schema inference costs one
+    * footer-read JOB per `spark.read.parquet` call, a fixed tax on every
+    * query construction (benched: ~0.03-0.2 s each), so the first read's
+    * inferred schema is cached and reused while the dataset's content
+    * fingerprint (the recursive (name, size, mtime) listing of
+    * [[ArtifactStore.fingerprint]]) is unchanged: a rewritten or appended
+    * dataset re-infers instead of serving a stale layout. A path that is
+    * not a local file is read uncached.
+    *
+    * Scans returned here (like any other scan of the same directory)
+    * participate in plan-level file skipping once a footer-stats index is
+    * registered for that directory via
     * [[graft.plans.StatsPruneRule.registerIndex]] — the optimizer rule
     * rewrites filtered scans to list only files whose min/max range can
     * match, fail-open, with no per-call opt-in here. */
-  /** Schema cache: parquet schema inference costs one footer-read JOB per
-    * `spark.read.parquet` call — a pure fixed tax on every query
-    * CONSTRUCTION (benched: ~0.03-0.2 s each). Testdata and artifact
-    * datasets are immutable within a JVM, so the first read's inferred
-    * schema is reused; the key carries the dataset's mtime so a rewritten
-    * path (fixture overwrite in tests) re-infers instead of serving a
-    * stale layout. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val f = new java.io.File(path)
+    if (!f.exists) spark.read.parquet(path)
+    else {
+      val fp = ArtifactStore.fingerprint(f, "")
+      val (_, sch) = schemaCache.compute(path, (_, hit) =>
+        if (hit != null && hit._1 == fp) hit
+        else (fp, spark.read.parquet(path).schema))
+      spark.read.schema(sch).parquet(path)
+    }
+  }
 
+  /** One logical table of an sf dir: `<sfDir>/<name>.parquet`. */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else {
-      val p = s"$sfDir/$name.parquet"
-      val key = s"$p:${new java.io.File(p).lastModified}"
-      val sch = schemaCache.computeIfAbsent(key,
-        _ => spark.read.parquet(p).schema)
-      spark.read.schema(sch).parquet(p)
-    }
+    else read(spark, s"$sfDir/$name.parquet")
 
   /** Like [[t]], but with a KERNEL-PARALLELISM FLOOR for CPU-heavy per-row
     * work (shingling, tokenization, n-gram explodes): a small table is one
@@ -96,6 +107,18 @@ object Tables {
     else df
   }
 
+  /** The events table with `ts` normalized (see [[withEventTs]]). */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    withEventTs(rawEvents(spark, s"$sfDir/events.parquet"))
+
+  /** An events-layout dataset as stored, int64-nanos `ts` read as raw
+    * longs (`spark.sql.legacy.parquet.nanosAsLong`, set before the read so
+    * the cached schema is always inferred under it). */
+  def rawEvents(spark: SparkSession, path: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    read(spark, path)
+  }
+
   /** The events table's `ts` column has shipped in two on-disk layouts:
     * int64 TIMESTAMP(NANOS) — which Spark's parquet reader rejects
     * (PARQUET_TYPE_ILLEGAL) unless read as raw longs — and plain
@@ -105,21 +128,13 @@ object Tables {
     * range); a timestamp reads directly, with NTZ normalized to the
     * session-zone TimestampType every downstream operator and oracle
     * comparison expects (sessions run UTC, so the instant is unchanged).
+    * Works on a batch or a streaming frame.
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // same footer-read-per-construction tax as t(); cache under the same
-    // (path, mtime) key (nanosAsLong is set before either branch, so the
-    // inferred schema is stable across calls)
-    val p = s"$sfDir/events.parquet"
-    val key = s"$p:${new java.io.File(p).lastModified}"
-    val sch = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(p).schema)
-    val raw = spark.read.schema(sch).parquet(p)
+  def withEventTs(raw: DataFrame): DataFrame = {
     val ts = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("timestamp_micros(ts div 1000)")
-      case org.apache.spark.sql.types.TimestampNTZType => col("ts").cast("timestamp")
-      case org.apache.spark.sql.types.TimestampType => col("ts")
+      case LongType => expr("timestamp_micros(ts div 1000)")
+      case TimestampNTZType => col("ts").cast("timestamp")
+      case TimestampType => col("ts")
       case other => throw new IllegalStateException(
         s"events.ts: unsupported parquet type $other (expected int64 nanos or timestamp)")
     }

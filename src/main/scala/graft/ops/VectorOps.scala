@@ -95,7 +95,7 @@ object VectorOps {
 
   def qSq8Topk(s: SparkSession, sf: String): DataFrame = {
     val e = t(s, sf, "embeddings")
-    val coded = s.read.parquet(ensureSq8(s, sf))
+    val coded = read(s, ensureSq8(s, sf))
     val qc = coded.filter(col("vec_id") === 0).select(col("codes").as("qc"))
     // tinyint × tinyint would wrap (127² > 127): widen inside the lambda —
     // the artifact stores int8 for footprint, arithmetic runs in 64-bit
@@ -422,8 +422,8 @@ object VectorOps {
     val nlist = adaptiveNlist(e.count())
     val dir = ArtifactStore.record("ivf_trained_batch",
       ensureTrainedIvf(s, sf, nlist = nlist))
-    val centroids = s.read.parquet(s"$dir/centroids")
-    val assign = s.read.parquet(s"$dir/assign")
+    val centroids = read(s, s"$dir/centroids")
+    val assign = read(s, s"$dir/assign")
     val el = e.select(col("vec_id"), col("embedding")).join(assign, "vec_id")
     val queries = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -445,7 +445,7 @@ object VectorOps {
     val e = t(s, sf, "embeddings")
     val path = ArtifactStore.record("ivf_centroids", ensureCentroids(s, sf))
     val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    ivfTopk(s.read.parquet(path), e, qv, nprobe = 3, k = 10)
+    ivfTopk(read(s, path), e, qv, nprobe = 3, k = 10)
   }
 
   /** K-means-trained IVF for corpora that do NOT ship a pre-assigned list
@@ -551,8 +551,8 @@ object VectorOps {
     * lexical side. */
   def appendTrainedIvf(s: SparkSession, baseDir: String, delta: DataFrame,
       outDir: String): Unit = {
-    val centroids = s.read.parquet(s"$baseDir/centroids")
-    val merged = s.read.parquet(s"$baseDir/assign")
+    val centroids = read(s, s"$baseDir/centroids")
+    val merged = read(s, s"$baseDir/assign")
       .unionByName(assignLists(delta, centroids))
     merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("compression", "zstd")
@@ -572,8 +572,8 @@ object VectorOps {
     * exactness at nprobe = nlist, and recall vs brute force. */
   def qIvfTrainedTopk(s: SparkSession, sf: String): DataFrame = {
     val dir = ArtifactStore.record("ivf_trained", ensureTrainedIvf(s, sf))
-    val centroids = s.read.parquet(s"$dir/centroids")
-    val assign = s.read.parquet(s"$dir/assign")
+    val centroids = read(s, s"$dir/centroids")
+    val assign = read(s, s"$dir/assign")
     val e = t(s, sf, "embeddings").select(col("vec_id"), col("embedding"))
       .join(assign, "vec_id")
     val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))

@@ -277,7 +277,7 @@ object IngestionPipeline {
       val done = timed("read_schema")(readTables(spark, local)).map { case (table, df) =>
         val pq = s"$outDir/parquet_files/$table.parquet"
         timed("read_clean_write")(IngestOps.writeParquetZstd(df, pq))
-        val persisted = spark.read.parquet(pq)
+        val persisted = graft.ops.Tables.read(spark, pq)
         val entry = timed("profile")(profileEntry(persisted, table, pq))
         val chunks = chunkTable(persisted, persisted.columns.head, chunkBudget,
           rowHint = Some(entry.rowCount))

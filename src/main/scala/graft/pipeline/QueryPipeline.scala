@@ -44,7 +44,7 @@ object QueryPipeline {
     * attribution (`chroma_retrieval_util.py:307-459`). */
   def semanticSearch(spark: SparkSession, collectionPath: String,
       question: String, k: Int = 10): DataFrame = {
-    val coll = spark.read.parquet(collectionPath)
+    val coll = Tables.read(spark, collectionPath)
     val qv = spark.range(1).select(
       IngestionPipeline.stubEmbed(64)(lit(question)).as("qv"))
     coll.crossJoin(broadcast(qv))
@@ -62,7 +62,7 @@ object QueryPipeline {
     * tables on it; single table → plain load. */
   def loadContext(spark: SparkSession, entries: Seq[TableEntry],
       joinKey: Option[String]): DataFrame = {
-    val dfs = entries.map(e => (e.logicalName, spark.read.parquet(e.parquetPath)))
+    val dfs = entries.map(e => (e.logicalName, Tables.read(spark, e.parquetPath)))
     (dfs, joinKey) match {
       case (Seq((_, only)), _) => only
       case (many, None) =>
@@ -73,14 +73,18 @@ object QueryPipeline {
     }
   }
 
-  /** Run one question end to end. Tables from `catalog` are registered as
-    * temp views so generated SQL addresses logical names, like the
-    * reference's `read_parquet` path map (`langgraph_pipeline.py:461-492`).
-    */
+  /** Register every `catalog` table as a temp view under its logical name,
+    * so generated SQL addresses logical names, like the reference's
+    * `read_parquet` path map (`langgraph_pipeline.py:461-492`). */
+  def registerViews(spark: SparkSession, catalog: Seq[TableEntry]): Unit =
+    catalog.foreach(e =>
+      Tables.read(spark, e.parquetPath).createOrReplaceTempView(e.logicalName))
+
+  /** Run one question end to end over `catalog`'s tables (see
+    * [[registerViews]]). */
   def run(spark: SparkSession, question: String, catalog: Seq[TableEntry],
       hooks: Hooks = Hooks(), collectionPath: Option[String] = None): Answer = {
-    catalog.foreach(e =>
-      spark.read.parquet(e.parquetPath).createOrReplaceTempView(e.logicalName))
+    registerViews(spark, catalog)
     val catalogText = catalog.map(_.describe).mkString("\n")
 
     val subResults = hooks.decomposer.decompose(question).map { sub =>

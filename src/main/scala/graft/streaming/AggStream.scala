@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DecimalType, LongType, StringType,
   StructField, StructType}
 
-import graft.ops.{ArtifactStore, MergeOps}
+import graft.ops.{ArtifactStore, MergeOps, Tables}
 
 /** Streaming incremental-aggregate maintenance — the X40 operator
   * (`MergeOps.qIncrAggMerge`) driven by Structured Streaming: each
@@ -49,7 +49,7 @@ object AggStream {
   def currentPartials(s: SparkSession, stateBase: String,
       beforeBatch: Long = Long.MaxValue): DataFrame =
     latestVersion(stateBase, beforeBatch) match {
-      case Some(dir) => s.read.parquet(dir)
+      case Some(dir) => Tables.read(s, dir)
       case None => s.createDataFrame(
         java.util.Collections.emptyList[Row](), stateSchema)
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.ops.{ArtifactStore, DedupOps}
+import graft.ops.{ArtifactStore, DedupOps, Tables}
 
 /** Streaming dedup-cluster maintenance: near-dup PAIR batches arrive as a
   * stream (the output of any verify stage — minhash, prefix-filter,
@@ -37,7 +37,7 @@ object DedupStream {
     * frame when none exists yet). */
   def currentLabels(s: SparkSession, stateBase: String): DataFrame =
     latestVersion(stateBase) match {
-      case Some(dir) => s.read.parquet(dir)
+      case Some(dir) => Tables.read(s, dir)
       case None => s.createDataFrame(
         java.util.Collections.emptyList[Row](), labelSchema)
     }

@@ -88,31 +88,12 @@ object EventStream {
   }
 
   /** Streaming file-source reader for the events layout. Streaming sources
-    * need an explicit schema, and the `ts` column has shipped both as int64
-    * TIMESTAMP(NANOS) (rejected unless read as raw longs + nanosAsLong) and
-    * as plain TIMESTAMP_MICROS — so peek at the dir with a one-off batch
-    * read (footer-only, no data scan) and build the streaming schema from
-    * the layout actually on disk. Mirror of `graft.ops.Tables.events`. */
-  def readEventsStream(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(dir).schema("ts").dataType
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val in = spark.readStream.schema(schema).parquet(dir)
-    tsType match {
-      case LongType         => in.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => in.withColumn("ts", col("ts").cast("timestamp"))
-      case TimestampType    => in
-      case other => throw new IllegalStateException(
-        s"events.ts: unsupported parquet type $other (expected int64 nanos or timestamp)")
-    }
-  }
+    * need an explicit schema: it is the batch reader's schema of the layout
+    * actually on disk, and `ts` is normalized exactly as in
+    * `graft.ops.Tables.events`. */
+  def readEventsStream(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    graft.ops.Tables.withEventTs(spark.readStream
+      .schema(graft.ops.Tables.rawEvents(spark, dir).schema).parquet(dir))
 
   case class Evt(user_id: Long, event_id: Long, tsMicros: Long)
   case class EvtT(user_id: Long, event_id: Long, tsMicros: Long, ts: java.sql.Timestamp)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.{ArtifactStore, VectorOps}
+import graft.ops.{ArtifactStore, Tables, VectorOps}
 
 /** Streaming face of `VectorOps.appendTrainedIvf`: embeddings arrive as a
   * stream, and each micro-batch is assigned against the FROZEN centroids
@@ -40,7 +40,7 @@ object VectorStream {
       .option("checkpointLocation", s"$segBase/_checkpoint")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) {
-          val centroids = batch.sparkSession.read.parquet(s"$ivfDir/centroids")
+          val centroids = Tables.read(batch.sparkSession, s"$ivfDir/centroids")
           val dir = new java.io.File(segBase, f"seg-$batchId%05d")
           VectorOps.assignLists(batch.toDF(), centroids)
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -60,6 +60,6 @@ object VectorStream {
   def assignmentsWithSegments(s: SparkSession, ivfDir: String,
       segBase: String): DataFrame = {
     val segs = sealedSegments(segBase).map(d => s"$d/assign")
-    s.read.parquet((s"$ivfDir/assign" +: segs): _*)
+    s.read.parquet((s"$ivfDir/assign" +: segs): _*) // a multi-path union: not Tables.read
   }
 }

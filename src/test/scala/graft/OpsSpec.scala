@@ -366,6 +366,22 @@ class OpsSpec extends SparkTestBase {
     assert(spark.read.parquet(path).count() == 1)
   }
 
+  test("Tables.read re-infers a rewritten dataset and reuses an unchanged one's schema") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "tables_read").toString
+    val path = s"$dir/t.parquet"
+    Seq((1L, "a")).toDF("k", "v").write.parquet(path)
+    assert(Tables.read(spark, path).columns.toSeq == Seq("k", "v"))
+    // same path, different column set: the cached schema must not be served
+    Seq((2L, 0.5, true)).toDF("k", "score", "flag").write.mode("overwrite").parquet(path)
+    assert(Tables.read(spark, path).columns.toSeq == Seq("k", "score", "flag"))
+    val (again, jobs) = withJobs(Tables.read(spark, path))
+    assert(jobs.isEmpty, s"re-reading an unchanged dataset ran jobs: $jobs")
+    assert(again.collect().map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2))).toSeq ==
+      Seq((2L, 0.5, true)))
+  }
+
   test("events table reads ns timestamps as usable timestamps") {
     val e = Tables.events(spark, sf)
     assert(e.schema("ts").dataType.typeName.startsWith("timestamp"))

@@ -79,6 +79,16 @@ class QueryPipelineSpec extends SparkTestBase {
     assert(r.tables.toSet == Set("orders", "customer"))
   }
 
+  test("a second run over the same catalog starts no schema-inference job") {
+    val catalog = Seq("orders", "customer").map(CatalogOps.profileTable(spark, sf, _))
+    val question = "total totalprice per mktsegment for orders and customer"
+    QueryPipeline.run(spark, question, catalog)
+    val (ans, jobs) = withJobs(QueryPipeline.run(spark, question, catalog))
+    assert(ans.subResults.head.error.isEmpty, s"error: ${ans.subResults.head.error}")
+    val schemaJobs = jobs.filter(_.startsWith("parquet at "))
+    assert(schemaJobs.isEmpty, s"schema-inference jobs on the second run: $schemaJobs")
+  }
+
   test("template generator chains THREE named tables on inferred keys") {
     import org.apache.spark.sql.functions._
     // the reference tool contract covers "two or more tables"

@@ -14,4 +14,22 @@ trait SparkTestBase extends AnyFunSuite {
     .getOrCreate()
 
   def sf: String = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the stage names of every Spark job it started. */
+  def withJobs[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        js.stageInfos.foreach(si => names.add(si.name))
+    }
+    waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      waitUntilListenerBusEmpty(spark.sparkContext)
+      (r, names.toArray(Array.empty[String]).toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
