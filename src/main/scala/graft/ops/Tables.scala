@@ -38,9 +38,14 @@ object Tables {
     if (!f.exists) spark.read.parquet(path)
     else {
       val fp = ArtifactStore.fingerprint(f, "")
-      val (_, sch) = schemaCache.compute(path, (_, hit) =>
-        if (hit != null && hit._1 == fp) hit
-        else (fp, spark.read.parquet(path).schema))
+      // infer outside the map's lock: concurrent callers must not wait on
+      // another path's footer job; two racing on one path infer it twice
+      val sch = Option(schemaCache.get(path)).filter(_._1 == fp).map(_._2)
+        .getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          schemaCache.put(path, (fp, inferred))
+          inferred
+        }
       spark.read.schema(sch).parquet(path)
     }
   }

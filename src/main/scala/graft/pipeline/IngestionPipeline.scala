@@ -7,15 +7,20 @@ import graft.ops.{CatalogOps, CleanColumns, IngestOps, ProfileOps}
 import graft.sources.ExcelSource
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException,
+  ExecutorCompletionService, Executors}
+import scala.util.control.NonFatal
 
 /** The end-to-end ingestion pipeline — the deterministic Spark rebuild of the
   * reference's `run_ingestion_pipeline` (`ingestion_pipeline_langgraph.py:
   * 1231-1306`): fetch → format dispatch → column cleaning → zstd parquet →
-  * catalog profiling → row chunking → vector-store sink. The reference
-  * orchestrates this through a LangGraph state machine with thread pools;
-  * here each per-file stage is a Spark job and the "graph" is function
-  * composition (SURVEY §3.2: the graph is orchestration sugar, not
-  * semantics).
+  * catalog profiling → row chunking → vector-store sink. Each per-file
+  * stage is a Spark job. As in the reference's `process_files_dispatcher`
+  * (`:688-738`, file pool at `:703`), inputs run concurrently on up to four
+  * lanes; inputs whose outputs could share a path run one after another on
+  * one lane, in input order, and results come back in input order, so the
+  * outputs match a one-at-a-time run. The LangGraph state machine itself
+  * is orchestration sugar, not semantics (SURVEY §3.2).
   */
 object IngestionPipeline {
 
@@ -37,8 +42,7 @@ object IngestionPipeline {
       // transient retry (sources/UrlSource; NetIngestSpec)
       graft.sources.UrlSource.download(url, workDir)
     else if (url.contains("://")) {
-      val name = url.split("/").last
-      val dest = Paths.get(workDir, name)
+      val dest = Paths.get(workDir, localName(url))
       Files.createDirectories(dest.getParent)
       val in = new java.net.URI(url).toURL.openStream()
       try Files.copy(in, dest, StandardCopyOption.REPLACE_EXISTING)
@@ -46,13 +50,33 @@ object IngestionPipeline {
       dest.toString
     } else url
 
+  /** The name of the file an input is read from: the one `fetch` writes
+    * under its work dir for a URL (query stripped for `http(s)://`), the
+    * last path segment of a plain path. Total: an input too malformed to
+    * name fails later, in `fetch`, where `run` records it. */
+  private def localName(url: String): String = {
+    val seg = url.split("/").lastOption.getOrElse("")
+    if (url.startsWith("http://") || url.startsWith("https://"))
+      scala.util.Try(graft.sources.UrlSource.fileName(new java.net.URI(url)))
+        .getOrElse(seg)
+    else seg
+  }
+
+  /** The file name of `path` without its extension. */
+  private def stem(path: String): String =
+    path.split("/").last.replaceAll("\\.[^.]+$", "")
+
+  private def isWorkbook(path: String): Boolean = {
+    val lower = path.toLowerCase
+    lower.endsWith(".xlsx") || lower.endsWith(".xls")
+  }
+
   /** One input file → one or more cleaned tables (xlsx: one per non-empty
     * sheet, named `<base>_<sheet>`; the reference's naming scheme,
     * `duckdb_util.py:302-306`). */
   def readTables(spark: SparkSession, path: String): Seq[(String, DataFrame)] = {
-    val base = path.split("/").last.replaceAll("\\.[^.]+$", "")
-    val lower = path.toLowerCase
-    if (lower.endsWith(".xlsx") || lower.endsWith(".xls"))
+    val base = stem(path)
+    if (isWorkbook(path))
       // workbook order preserved (readXlsx returns an ordered Seq)
       ExcelSource.readXlsx(spark, path).map { case (sheet, df) =>
         (CleanColumns.cleanName(s"${base}_$sheet"), df)
@@ -289,6 +313,30 @@ object IngestionPipeline {
     }
   }
 
+  /** The reference's file pool width: `process_files_dispatcher` runs
+    * inputs on `ThreadPoolExecutor(max_workers=min(len(files), 4))`
+    * (`ingestion_pipeline_langgraph.py:703`). */
+  private val MaxLanes = 4
+
+  /** Input indices grouped by the output paths they could share, each
+    * group in input order, groups ordered by their first input. An input
+    * writes `<key>.parquet` (key = cleaned stem of its `localName`, which
+    * also names its download) and a workbook writes `<key>_<sheet>.parquet`
+    * (`<sheet>.parquet` for an empty key), so two inputs clash when their
+    * keys are equal or one is a workbook whose key plus `_` prefixes the
+    * other's or is empty. */
+  private[graft] def laneGroups(inputs: Seq[String]): Seq[Seq[Int]] = {
+    val names = inputs.map(localName)
+    val keys = names.map(n => CleanColumns.cleanName(stem(n)))
+    def covers(a: Int, b: Int) = isWorkbook(names(a)) &&
+      (keys(a).isEmpty || keys(b).startsWith(keys(a) + "_"))
+    def clash(a: Int, b: Int) = keys(a) == keys(b) || covers(a, b) || covers(b, a)
+    inputs.indices.foldLeft(Vector.empty[Vector[Int]]) { (groups, i) =>
+      val (hit, rest) = groups.partition(_.exists(clash(_, i)))
+      (rest :+ (hit.flatten.sorted :+ i)).sortBy(_.head)
+    }
+  }
+
   /** Full run: inputs → parquet tables + catalog envelope + chunk
     * collections, with the reference's per-file degrade contract: a corrupt
     * or unreadable input is recorded in `failed` and the batch CONTINUES
@@ -299,23 +347,67 @@ object IngestionPipeline {
     * `error_handler_node` envelope (`:1147-1186`) — success=false, zero
     * counts, `vector_ingestion_status:"not_started"`, the canonical error
     * string. `resume=true` (default) also makes the run idempotent via
-    * per-input markers (see above). */
+    * per-input markers (see above).
+    *
+    * Inputs run concurrently on up to four lanes, the reference's file pool
+    * width (`:703`), on daemon threads `graft-ingest-<n>` created per call,
+    * so they inherit the caller's Spark local properties and active
+    * session. Inputs that could write the same output path (see
+    * `laneGroups`) run one after another on one lane, in input order, so
+    * the last one wins as in a sequential run. `files`, `failed`, the
+    * catalog and the envelope list inputs in input order. A non-fatal
+    * failure degrades its input to a `FailedFile`; any other throwable
+    * (an interrupt included) cancels the other lanes and propagates.
+    *
+    * @param stageSink receives `(stage, seconds)` per stage of each input.
+    *   It is called from the lane threads, one call at a time (`run` holds
+    *   one lock around every call), so a plain mutable accumulator is
+    *   safe; stage seconds of overlapping inputs overlap in wall time. */
   def run(spark: SparkSession, inputs: Seq[String], outDir: String,
       chunkBudget: Int = 1000, sessionId: String = "graft",
       timestamp: String = "", resume: Boolean = true,
       stageSink: (String, Double) => Unit = (_, _) => ()): PipelineResult = {
     require(inputs.nonEmpty, "No input files provided") // validate_inputs_node
     Files.createDirectories(Paths.get(s"$outDir/parquet_files"))
-    val outcomes = inputs.map { url =>
-      try Right(processOne(spark, url, outDir, chunkBudget, resume, stageSink))
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          Left(FailedFile(url, s"${e.getClass.getSimpleName}: " +
-            Option(e.getMessage).getOrElse("")))
+    val sinkLock = new Object
+    val sink: (String, Double) => Unit = (name, s) => sinkLock.synchronized(stageSink(name, s))
+    val outcomes =
+      new Array[Either[FailedFile, Seq[(FileResult, CatalogOps.TableEntry)]]](inputs.size)
+    val groups = laneGroups(inputs)
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(math.min(groups.size, MaxLanes), { (r: Runnable) =>
+      val t = new Thread(r, s"graft-ingest-${threads.size + 1}")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+    try {
+      val lanes = new ExecutorCompletionService[Unit](pool)
+      groups.foreach(g => lanes.submit(() => g.foreach { i =>
+        // a lane cancelled between inputs stops, even if a Spark call
+        // swallowed the interrupt
+        if (pool.isShutdown) throw new InterruptedException("ingest cancelled")
+        val url = inputs(i)
+        outcomes(i) =
+          try Right(processOne(spark, url, outDir, chunkBudget, resume, sink))
+          catch {
+            case NonFatal(e) =>
+              Left(FailedFile(url, s"${e.getClass.getSimpleName}: " +
+                Option(e.getMessage).getOrElse("")))
+          }
+      }))
+      groups.foreach { _ =>
+        try lanes.take().get()
+        catch { case e: ExecutionException => throw e.getCause }
       }
+    } finally {
+      pool.shutdownNow()
+      // join, not awaitTermination: a pool reports terminated while its
+      // last worker thread is still alive
+      threads.forEach(_.join())
     }
-    val done = outcomes.collect { case Right(d) => d }.flatten
-    val failed = outcomes.collect { case Left(f) => f }
+    val done = outcomes.toSeq.collect { case Right(d) => d }.flatten
+    val failed = outcomes.toSeq.collect { case Left(f) => f }
     val files = done.map(_._1)
     val catalogJson = done.map(_._2.toJson).mkString("[", ",", "]")
     val env =

@@ -133,7 +133,7 @@ object UrlSource {
 
   /** Last path segment, query stripped — the reference names the local file
     * from the URL tail; a bare host (no path) falls back to "download". */
-  private[sources] def fileName(uri: URI): String = {
+  private[graft] def fileName(uri: URI): String = {
     val path = Option(uri.getPath).getOrElse("")
     val seg = path.split("/").lastOption.getOrElse("")
     if (seg.nonEmpty) seg else "download"

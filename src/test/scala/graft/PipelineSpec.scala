@@ -152,6 +152,131 @@ class PipelineSpec extends SparkTestBase {
       java.nio.file.Paths.get(s"$out/catalog.json")) == res.envelopeJson)
   }
 
+  test("per-file failure isolation without a workbook fixture: csv, poison, csv") {
+    val out = "target/pipeline_degrade_csv"
+    graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
+    val first = stageCsv(s"$out/in", "first.csv", Seq("id,seg", "1,A", "2,B"))
+    val poison = stageCsv(s"$out/in", "poison.xlsx", Seq("this is not a zip"))
+    val last = stageCsv(s"$out/in", "last.csv", Seq("id,bal", "1,10.5", "2,20.25", "3,30.0"))
+
+    val res = IngestionPipeline.run(spark, Seq(first, poison, last), out, resume = false)
+
+    assert(res.files.map(f => (f.table, f.rows)) == Seq(("first", 2L), ("last", 3L)))
+    assert(res.failed.map(_.input) == Seq(poison) && res.failed.head.error.nonEmpty)
+    val env = new com.fasterxml.jackson.databind.ObjectMapper().readTree(res.envelopeJson)
+    assert(env.get("success").asBoolean)
+    assert(env.get("processing_summary").get("failed_files").asInt == 1)
+    assert(env.get("catalog").size == 2)
+  }
+
+  /** Five small delimited/JSON inputs with distinct stems. */
+  private def stageMixed(dir: String): Seq[String] = {
+    def rows(n: Int, f: Int => String) = (0 until n).map(f)
+    Seq(
+      stageCsv(dir, "alpha.csv", "id,name,score" +: rows(120, i => s"$i,n$i,${i * 0.5}")),
+      stageCsv(dir, "Beta Set.tsv", "Key\tLabel" +: rows(80, i => s"$i\tl${i % 7}")),
+      stageCsv(dir, "gamma.json", Seq(rows(60, i => s"""{"g": $i, "t": "x$i"}""")
+        .mkString("[", ",\n", "]"))),
+      stageCsv(dir, "delta.csv", "d,flag" +: rows(200, i => s"$i,${i % 2 == 0}")),
+      stageCsv(dir, "eps.tsv", "e\tv" +: rows(40, i => s"$i\t${i * i}")))
+  }
+
+  private def sortedRows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+
+  test("concurrent lanes: one run equals the single-input runs, in input order") {
+    val out = "target/pipeline_lanes"
+    graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
+    val inputs = stageMixed(s"$out/in")
+    val all = IngestionPipeline.run(spark, inputs, s"$out/all", resume = false)
+    assert(all.failed.isEmpty, s"unexpected failures: ${all.failed}")
+    assert(all.files.map(_.input) == inputs)
+
+    val singles = inputs.zipWithIndex.map { case (in, i) =>
+      val dir = s"$out/one_$i"
+      val r = IngestionPipeline.run(spark, Seq(in), dir, resume = false)
+      assert(r.files.size == 1 && r.failed.isEmpty)
+      (dir, r)
+    }
+    assert(all.files.map(_.rows) == singles.map(_._2.files.head.rows))
+    // same catalog entries, byte for byte once the out dir is swapped
+    assert(all.catalogJson == singles.map { case (dir, r) =>
+      r.catalogJson.stripPrefix("[").stripSuffix("]").replace(s"$dir/", s"$out/all/")
+    }.mkString("[", ",", "]"))
+    singles.foreach { case (dir, r) =>
+      val table = r.files.head.table
+      assert(sortedRows(s"$out/all/parquet_files/$table.parquet") ==
+        sortedRows(r.files.head.parquetPath), table)
+      assert(sortedRows(s"$out/all/collections/data_source_$table.parquet") ==
+        sortedRows(s"$dir/collections/data_source_$table.parquet"), table)
+    }
+  }
+
+  test("stageSink calls never overlap") {
+    val out = "target/pipeline_sink"
+    graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
+    val inside = new java.util.concurrent.atomic.AtomicInteger()
+    val overlaps = new java.util.concurrent.atomic.AtomicInteger()
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val res = IngestionPipeline.run(spark, stageMixed(s"$out/in"), out, resume = false,
+      stageSink = (_, _) => {
+        if (inside.incrementAndGet() > 1) overlaps.incrementAndGet()
+        calls.incrementAndGet()
+        Thread.sleep(20) // widen the window another lane's call could hit
+        inside.decrementAndGet()
+      })
+    assert(res.failed.isEmpty && res.files.size == 5)
+    assert(calls.get == 25) // five stages per single-table input
+    assert(overlaps.get == 0)
+  }
+
+  test("same-stem inputs run in input order and the last one wins") {
+    val out = "target/pipeline_dup"
+    graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
+    val small = stageCsv(s"$out/in", "dup.csv", "k,v" +: (1 to 3).map(i => s"$i,a$i"))
+    val other = stageCsv(s"$out/in", "other.csv", Seq("k", "1"))
+    val big = stageCsv(s"$out/in", "dup.tsv", "k\tv" +: (1 to 5).map(i => s"$i\tb$i"))
+    val res = IngestionPipeline.run(spark, Seq(small, other, big), out, resume = false)
+    assert(res.files.map(f => (f.input, f.table, f.rows)) ==
+      Seq((small, "dup", 3L), (other, "other", 1L), (big, "dup", 5L)))
+    assert(sortedRows(s"$out/parquet_files/dup.parquet") ==
+      (1 to 5).map(i => s"[$i,b$i]"))
+    val lines = spark.read.parquet(s"$out/collections/data_source_dup.parquet")
+      .collect().flatMap(_.getAs[String]("text").split("\n")).toSeq
+    assert(lines.size == 5 && lines.forall(_.contains("v:b")), lines)
+  }
+
+  test("lane groups: same stems and workbook sheet prefixes share a lane") {
+    val groups = IngestionPipeline.laneGroups(Seq("a/x.csv", "loan_data.csv",
+      "b/X.tsv", "y.json", "file:///in/loan.xlsx", "z.csv", "loan_data_2.csv"))
+    assert(groups == Seq(Seq(0, 2), Seq(1, 4, 6), Seq(3), Seq(5)))
+    // URLs are keyed by the file fetch writes, query stripped
+    assert(IngestionPipeline.laneGroups(Seq("https://h/loan.xlsx?sig=1",
+      "loan_data.csv", "https://h/d.csv?v=1.0", "https://h/d.tsv?v=2.0", "e.csv")) ==
+      Seq(Seq(0, 1), Seq(2, 3), Seq(4)))
+    // a workbook with an empty key writes bare `<sheet>` tables
+    assert(IngestionPipeline.laneGroups(Seq("a.csv", "-.xlsx", "b.csv")) == Seq(Seq(0, 1, 2)))
+    // unnameable inputs still get a lane; they fail in fetch, inside run
+    assert(IngestionPipeline.laneGroups(Seq("/", "https://h/a b.csv")).flatten == Seq(0, 1))
+  }
+
+  test("an interrupt in a lane propagates out of run and leaves no lane thread") {
+    import scala.jdk.CollectionConverters._
+    val out = "target/pipeline_interrupt"
+    graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
+    val inputs = stageMixed(s"$out/in")
+    val task = new java.util.concurrent.FutureTask[IngestionPipeline.PipelineResult](() =>
+      IngestionPipeline.run(spark, inputs, out, resume = false, stageSink = (name, _) =>
+        if (name == "profile") throw new InterruptedException("stop")))
+    new Thread(task, "pipeline-interrupt-caller").start()
+    val err = intercept[java.util.concurrent.ExecutionException](
+      task.get(180, java.util.concurrent.TimeUnit.SECONDS))
+    assert(err.getCause.isInstanceOf[InterruptedException], err.getCause)
+    val lanes = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-ingest-") && t.isAlive)
+    assert(lanes.isEmpty, lanes.map(_.getName))
+  }
+
   test("all inputs failing yields the reference error envelope byte-for-byte") {
     val out = "target/pipeline_degrade"
     graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
