@@ -13,12 +13,13 @@ import org.apache.spark.sql.SparkSession
   * reference's own demo surface (spreadsheet + delimited files). CSVs are
   * staged once from the sf parquet tables and byte-copied per replica, so
   * scaling multiplies INPUT COUNT (the pipeline's unit of work — per-file
-  * fetch/read/write/profile/chunk), not row count per file.
+  * fetch/read/write/chunk), not row count per file.
   *
   * Stage names follow the pipeline's action boundaries (Spark fuses the
   * lazy read→clean chain into the parquet write): `fetch`, `read_schema`
-  * (CSV/xlsx schema inference), `read_clean_write` (one job),
-  * `profile`, `chunk_collection`. The pipeline runs up to four inputs at
+  * (CSV/xlsx schema inference), `read_clean_write` (one job, which also
+  * computes the catalog profile — there is no `profile` stage),
+  * `chunk_collection`. The pipeline runs up to four inputs at
   * once, so each stage figure sums that stage's seconds over inputs that
   * overlap in time, and the stage figures together can exceed
   * `ingest_total`, the run's wall time.

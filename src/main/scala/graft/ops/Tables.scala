@@ -50,6 +50,16 @@ object Tables {
     }
   }
 
+  /** Record the schema of a dataset this process just wrote, so the next
+    * [[read]] of it starts no schema-inference job: a parquet write stores
+    * the frame's schema with every field made nullable, which is what
+    * inference would return. A path that is not a local file is left
+    * alone. */
+  def seed(path: String, written: StructType): Unit = {
+    val f = new java.io.File(path)
+    if (f.exists) schemaCache.put(path, (ArtifactStore.fingerprint(f, ""), written.toNullable))
+  }
+
   /** One logical table of an sf dir: `<sfDir>/<name>.parquet`. */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)

@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.ops.{CatalogOps, CleanColumns, IngestOps, ProfileOps}
+import org.apache.spark.sql.types.StructType
+import graft.ops.{CatalogOps, CleanColumns, IngestOps, ProfileOps, Tables}
 import graft.sources.ExcelSource
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -13,9 +14,10 @@ import scala.util.control.NonFatal
 
 /** The end-to-end ingestion pipeline — the deterministic Spark rebuild of the
   * reference's `run_ingestion_pipeline` (`ingestion_pipeline_langgraph.py:
-  * 1231-1306`): fetch → format dispatch → column cleaning → zstd parquet →
-  * catalog profiling → row chunking → vector-store sink. Each per-file
-  * stage is a Spark job. As in the reference's `process_files_dispatcher`
+  * 1231-1306`): fetch → format dispatch → column cleaning → zstd parquet
+  * (with the catalog profile observed in the same job) → row chunking →
+  * vector-store sink. Each table costs one write job plus one chunk
+  * collection job. As in the reference's `process_files_dispatcher`
   * (`:688-738`, file pool at `:703`), inputs run concurrently on up to four
   * lanes; inputs whose outputs could share a path run one after another on
   * one lane, in input order, and results come back in input order, so the
@@ -95,9 +97,14 @@ object IngestionPipeline {
     *      smaller order keys than block i+1);
     *   2. the char-budget running sum runs per block
     *      (`Window.partitionBy(block)`) — bounded task size by construction;
-    *   3. per-block chunk counts (one row per block — a tiny frame) are
-    *      prefix-summed into block offsets, and `chunk_id = offset +
-    *      chunk_in_block` keeps ids dense and globally ordered.
+    *   3. rows are grouped into chunks on `(block, chunk_in_block)`: the
+    *      window already hash-partitioned them by block, so the grouping
+    *      adds no exchange;
+    *   4. with several blocks, per-block chunk counts (one row per block —
+    *      a tiny frame) are prefix-summed into block offsets, and `chunk_id
+    *      = offset + chunk_in_block` keeps ids globally ordered. A table
+    *      that fits one block needs no offset: `chunk_id = chunk_in_block`,
+    *      one shuffle and no broadcast.
     * A block boundary forces a chunk break; with the default block size that
     * only differs from a single global running sum on tables of 65k+ rows,
     * where chunk layout is an artifact anyway (coverage and row order are
@@ -111,8 +118,8 @@ object IngestionPipeline {
     val rowText = concat(lit("[index "), col(orderCol), lit("] "),
       concat_ws(" | ", body: _*))
     // rowHint: callers that already counted the table (the pipeline profiles
-    // it in the same breath) pass the count in, so block sizing doesn't cost
-    // an extra full pass per ingested table
+    // it inside its parquet write) pass the count in, so block sizing
+    // doesn't cost an extra full pass per ingested table
     val total = rowHint.getOrElse(df.count())
     val nBlocks = math.max(1L, (total + rowsPerBlock - 1L) / rowsPerBlock).toInt
     val rows = df.select(col(orderCol).as("__idx"), rowText.as("row_text"))
@@ -125,31 +132,36 @@ object IngestionPipeline {
         .withColumn("block", spark_partition_id().cast("long"))
     val wRun = Window.partitionBy("block").orderBy("__idx")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withChunk = blocked.withColumn("chunk_in_block",
-      floor((sum(col("len")).over(wRun) - col("len")) / lit(budget.toDouble))
-        .cast("long"))
-    // block → first global chunk id; one row per block, so the unpartitioned
-    // prefix-sum window is over ≤ nBlocks rows, never the data
-    val offsets = withChunk.groupBy("block")
-      .agg((max(col("chunk_in_block")) + 1L).as("n_chunks"))
-      .withColumn("offset",
-        coalesce(sum(col("n_chunks")).over(Window.orderBy("block")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("block", "offset")
-    withChunk.join(broadcast(offsets), Seq("block"))
-      .withColumn("chunk_id", col("offset") + col("chunk_in_block"))
-      .groupBy("chunk_id")
+    val chunks = blocked.withColumn("chunk_in_block",
+        floor((sum(col("len")).over(wRun) - col("len")) / lit(budget.toDouble))
+          .cast("long"))
+      .groupBy("block", "chunk_in_block")
       .agg(array_sort(collect_list(struct(col("__idx"), col("row_text"))))
         .as("sorted_rows"),
         count(lit(1)).as("n_rows"))
-      // text lines and row_indices are derived from the SAME sorted array so
-      // line i always corresponds to row_indices[i] (collect_list alone is
-      // partition-order nondeterministic)
-      .select(col("chunk_id"),
-        array_join(transform(col("sorted_rows"), x => x.getField("row_text")), "\n")
-          .as("text"),
-        transform(col("sorted_rows"), x => x.getField("__idx")).as("row_indices"),
-        col("n_rows"))
+    val numbered =
+      if (nBlocks == 1) chunks.withColumn("chunk_id", col("chunk_in_block"))
+      else {
+        // block → first global chunk id; one row per block, so the
+        // unpartitioned prefix-sum window is over ≤ nBlocks rows, never the
+        // data
+        val offsets = chunks.groupBy("block")
+          .agg((max(col("chunk_in_block")) + 1L).as("n_chunks"))
+          .withColumn("offset",
+            coalesce(sum(col("n_chunks")).over(Window.orderBy("block")
+              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+          .select("block", "offset")
+        chunks.join(broadcast(offsets), Seq("block"))
+          .withColumn("chunk_id", col("offset") + col("chunk_in_block"))
+      }
+    // text lines and row_indices are derived from the SAME sorted array so
+    // line i always corresponds to row_indices[i] (collect_list alone is
+    // partition-order nondeterministic)
+    numbered.select(col("chunk_id"),
+      array_join(transform(col("sorted_rows"), x => x.getField("row_text")), "\n")
+        .as("text"),
+      transform(col("sorted_rows"), x => x.getField("__idx")).as("row_indices"),
+      col("n_rows"))
   }
 
   /** V2 seam: the embedding kernel is pluggable; the default is a STUB — a
@@ -182,25 +194,32 @@ object IngestionPipeline {
     path
   }
 
-  /** One aggregation pass over a freshly-written table: row count + per-
-    * column null/distinct stats (HLL++ sketches, not exact countDistinct —
-    * see CatalogOps.profileTable for the 100-TB argument). The count this
-    * returns also sizes chunkTable's blocks, so profiling and chunk layout
-    * share the single pass. */
-  private def profileEntry(df: DataFrame, table: String,
-      parquetPath: String): CatalogOps.TableEntry = {
-    val cols = df.schema.fields.toSeq
-    val aggs = count(lit(1)).as("__n") +: cols.flatMap { fld =>
-      Seq(sum(when(col(fld.name).isNull, 1L).otherwise(0L)).as(s"${fld.name}__nnull"),
+  /** The catalog profile of a table as observed metrics of its parquet
+    * write (`Dataset.observe`), so profiling costs no job of its own: row
+    * count + per-column null/distinct stats (HLL++ sketches, not exact
+    * countDistinct — see CatalogOps.profileTable for the 100-TB argument).
+    * The count also sizes chunkTable's blocks. */
+  private def profiled(df: DataFrame, profile: Observation): DataFrame = {
+    val metrics = df.schema.fields.toSeq.zipWithIndex.flatMap { case (fld, i) =>
+      // coalesce: sum over ZERO rows is NULL (a header-only input)
+      Seq(coalesce(sum(when(col(fld.name).isNull, 1L).otherwise(0L)), lit(0L)).as(s"nnull_$i"),
         // rsd 0.05 — see CatalogOps.profileTable: precision 0.01 costs
         // 20-50 s of quadratic Catalyst planning per wide table
-        approx_count_distinct(col(fld.name).cast("string"), 0.05).as(s"${fld.name}__ndist"))
+        approx_count_distinct(col(fld.name).cast("string"), 0.05).as(s"ndist_$i"))
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    CatalogOps.TableEntry(table, parquetPath, row.getLong(0),
-      cols.zipWithIndex.map { case (fld, i) =>
+    df.observe(profile, count(lit(1)).as("rows"), metrics: _*)
+  }
+
+  /** The catalog entry of a table written from a [[profiled]] frame with
+    * schema `schema`; call it after the write has finished. */
+  private def profileEntry(profile: Observation, schema: StructType, table: String,
+      parquetPath: String): CatalogOps.TableEntry = {
+    val m = profile.get
+    def long(name: String) = m(name).asInstanceOf[Long]
+    CatalogOps.TableEntry(table, parquetPath, long("rows"),
+      schema.fields.toSeq.zipWithIndex.map { case (fld, i) =>
         CatalogOps.ColumnMeta(fld.name, ProfileOps.duckTypeName(fld.dataType),
-          row.getLong(1 + 2 * i), row.getLong(2 + 2 * i))
+          long(s"nnull_$i"), long(s"ndist_$i"))
       })
   }
 
@@ -272,9 +291,12 @@ object IngestionPipeline {
       }
     }.toOption
 
-  /** Process ONE input file end-to-end (fetch → tables → parquet →
-    * chunk collections → catalog entries), honoring a matching resume
-    * marker. Throws on any failure — `run` owns the per-file degrade. */
+  /** Process ONE input file end-to-end (fetch → tables → parquet with the
+    * catalog profile observed in the write → chunk collections), honoring a
+    * matching resume marker. Stages, as reported to `stageSink`: `fetch`,
+    * `read_schema`, then per table `read_clean_write` and
+    * `chunk_collection`; there is no `profile` stage. Throws on any
+    * failure — `run` owns the per-file degrade. */
   private def processOne(spark: SparkSession, url: String, outDir: String,
       chunkBudget: Int, resume: Boolean,
       stageSink: (String, Double) => Unit = (_, _) => ())
@@ -282,8 +304,8 @@ object IngestionPipeline {
     // stage boundaries follow the pipeline's ACTIONS, because Spark fuses
     // the lazy read→clean chain into the parquet write job: fetch and
     // read_schema (CSV/xlsx schema work) are eager, read_clean_write is
-    // one job, profile and chunk_collection are jobs on the persisted
-    // parquet. BenchIngest aggregates these per mult level.
+    // one job, chunk_collection one more. BenchIngest aggregates these per
+    // mult level.
     def timed[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
@@ -300,9 +322,12 @@ object IngestionPipeline {
     resumed.getOrElse {
       val done = timed("read_schema")(readTables(spark, local)).map { case (table, df) =>
         val pq = s"$outDir/parquet_files/$table.parquet"
-        timed("read_clean_write")(IngestOps.writeParquetZstd(df, pq))
-        val persisted = graft.ops.Tables.read(spark, pq)
-        val entry = timed("profile")(profileEntry(persisted, table, pq))
+        val profile = Observation()
+        timed("read_clean_write")(IngestOps.writeParquetZstd(profiled(df, profile), pq))
+        val entry = profileEntry(profile, df.schema, table, pq)
+        // the written schema, so the re-read starts no schema-inference job
+        Tables.seed(pq, df.schema)
+        val persisted = Tables.read(spark, pq)
         val chunks = chunkTable(persisted, persisted.columns.head, chunkBudget,
           rowHint = Some(entry.rowCount))
         timed("chunk_collection")(writeCollection(chunks, table, outDir))

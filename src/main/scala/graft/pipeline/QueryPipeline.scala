@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.CatalogOps.TableEntry
-import graft.ops.Tables
+import graft.ops.{ArtifactStore, Tables}
 import graft.planner.PlannerHooks
 import graft.planner.PlannerHooks._
 import scala.util.control.NonFatal
@@ -73,12 +73,37 @@ object QueryPipeline {
     }
   }
 
+  /** Per logical name, the view [[registerViews]] last created: the
+    * dataset path, its [[ArtifactStore.fingerprint]] at the time, and the
+    * session catalog's own view object. */
+  private val registered =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, String, AnyRef)]()
+
   /** Register every `catalog` table as a temp view under its logical name,
     * so generated SQL addresses logical names, like the reference's
-    * `read_parquet` path map (`langgraph_pipeline.py:461-492`). */
-  def registerViews(spark: SparkSession, catalog: Seq[TableEntry]): Unit =
-    catalog.foreach(e =>
-      Tables.read(spark, e.parquetPath).createOrReplaceTempView(e.logicalName))
+    * `read_parquet` path map (`langgraph_pipeline.py:461-492`). Building a
+    * view costs a read and an analysis, and every question calls this, so
+    * a view is rebuilt only when it is not the one this method registered
+    * last for that name or its dataset's fingerprint moved; a path that is
+    * not a local file is always rebuilt. */
+  def registerViews(spark: SparkSession, catalog: Seq[TableEntry]): Unit = {
+    val views = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog
+    catalog.foreach { e =>
+      val f = new java.io.File(e.parquetPath)
+      val fp = if (f.exists) Some(ArtifactStore.fingerprint(f, "")) else None
+      val current = views.getRawTempView(e.logicalName)
+      val unchanged = Option(registered.get(e.logicalName)).exists {
+        case (path, seen, view) => path == e.parquetPath && fp.contains(seen) &&
+          current.exists(_ eq view)
+      }
+      if (!unchanged) {
+        Tables.read(spark, e.parquetPath).createOrReplaceTempView(e.logicalName)
+        for (p <- fp; v <- views.getRawTempView(e.logicalName))
+          registered.put(e.logicalName, (e.parquetPath, p, v))
+      }
+    }
+  }
 
   /** Run one question end to end over `catalog`'s tables (see
     * [[registerViews]]). */

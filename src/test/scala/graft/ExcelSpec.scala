@@ -64,32 +64,11 @@ class ExcelSpec extends SparkTestBase {
     val names = Seq("Zeta", "Alpha", "Mid", "Beta", "Last", "First6")
     val path = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "xlsx_order").resolve("o.xlsx").toString
-    import java.util.zip.{ZipEntry, ZipOutputStream}
-    val zos = new ZipOutputStream(new java.io.FileOutputStream(path))
-    def put(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    val sheetDecls = names.zipWithIndex.map { case (n, i) =>
-      s"""<sheet name="$n" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
-    }.mkString
-    put("xl/workbook.xml",
-      s"""<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-         | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-         |<sheets>$sheetDecls</sheets></workbook>""".stripMargin)
-    put("xl/_rels/workbook.xml.rels",
-      s"""<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-         |${names.indices.map(i =>
-             s"""<Relationship Id="rId${i + 1}" Type="t" Target="worksheets/sheet${i + 1}.xml"/>""")
-           .mkString}</Relationships>""".stripMargin)
-    names.zipWithIndex.foreach { case (n, i) =>
-      put(s"xl/worksheets/sheet${i + 1}.xml",
-        s"""<worksheet><sheetData>
-           |<row r="1"><c r="A1" t="inlineStr"><is><t>v</t></is></c></row>
-           |<row r="2"><c r="A2" t="inlineStr"><is><t>$n</t></is></c></row>
-           |</sheetData></worksheet>""".stripMargin)
-    }
-    zos.close()
+    XlsxFixtures.write(path, names.map(n => n ->
+      s"""<worksheet><sheetData>
+         |<row r="1"><c r="A1" t="inlineStr"><is><t>v</t></is></c></row>
+         |<row r="2"><c r="A2" t="inlineStr"><is><t>$n</t></is></c></row>
+         |</sheetData></worksheet>""".stripMargin))
     val sh = ExcelSource.readXlsx(spark, path)
     assert(sh.map(_._1) == names)
     // first-sheet identity through the readAny "first non-empty sheet" path
@@ -100,31 +79,9 @@ class ExcelSpec extends SparkTestBase {
   test("date-styled numeric cells become ISO strings; plain numerics stay numeric") {
     val path = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "xlsx_dates").resolve("d.xlsx").toString
-    import java.util.zip.{ZipEntry, ZipOutputStream}
-    val zos = new ZipOutputStream(new java.io.FileOutputStream(path))
-    def put(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    put("xl/workbook.xml",
-      """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-        | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-        |<sheets><sheet name="D" sheetId="1" r:id="rId1"/></sheets></workbook>""".stripMargin)
-    put("xl/_rels/workbook.xml.rels",
-      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-        |<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/></Relationships>""".stripMargin)
     // style 0: General; style 1: builtin date (numFmtId 14 = m/d/yyyy);
     // style 2: custom date code; style 3: custom NON-date code (currency)
-    put("xl/styles.xml",
-      """<styleSheet>
-        |<numFmts count="2">
-        |  <numFmt numFmtId="164" formatCode="yyyy\-mm\-dd"/>
-        |  <numFmt numFmtId="165" formatCode="&quot;$&quot;#,##0.00"/>
-        |</numFmts>
-        |<cellXfs count="4">
-        |  <xf numFmtId="0"/><xf numFmtId="14"/><xf numFmtId="164"/><xf numFmtId="165"/>
-        |</cellXfs></styleSheet>""".stripMargin)
-    put("xl/worksheets/sheet1.xml",
+    XlsxFixtures.write(path, Seq("D" ->
       """<worksheet><sheetData>
         |<row r="1"><c r="A1" t="inlineStr"><is><t>d_builtin</t></is></c>
         |  <c r="B1" t="inlineStr"><is><t>d_custom</t></is></c>
@@ -136,8 +93,16 @@ class ExcelSpec extends SparkTestBase {
         |  <c r="C2" s="1"><v>45000.5</v></c>
         |  <c r="D2" s="3"><v>45000</v></c>
         |  <c r="E2"><v>45000</v></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    zos.close()
+        |</sheetData></worksheet>""".stripMargin),
+      parts = Seq("xl/styles.xml" ->
+        """<styleSheet>
+          |<numFmts count="2">
+          |  <numFmt numFmtId="164" formatCode="yyyy\-mm\-dd"/>
+          |  <numFmt numFmtId="165" formatCode="&quot;$&quot;#,##0.00"/>
+          |</numFmts>
+          |<cellXfs count="4">
+          |  <xf numFmtId="0"/><xf numFmtId="14"/><xf numFmtId="164"/><xf numFmtId="165"/>
+          |</cellXfs></styleSheet>""".stripMargin))
     val df = ExcelSource.readXlsx(spark, path).head._2
     val row = df.head
     assert(row.getString(0) == "2023-03-15")            // builtin date style
@@ -153,29 +118,15 @@ class ExcelSpec extends SparkTestBase {
   test("workbookPr date1904 switches xlsx date serials to the 1904 epoch") {
     val path = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "xlsx_1904").resolve("m.xlsx").toString
-    import java.util.zip.{ZipEntry, ZipOutputStream}
-    val zos = new ZipOutputStream(new java.io.FileOutputStream(path))
-    def put(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    put("xl/workbook.xml",
-      """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-        | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-        |<workbookPr date1904="1"/>
-        |<sheets><sheet name="D" sheetId="1" r:id="rId1"/></sheets></workbook>""".stripMargin)
-    put("xl/_rels/workbook.xml.rels",
-      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-        |<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/></Relationships>""".stripMargin)
-    put("xl/styles.xml",
-      """<styleSheet><cellXfs count="2"><xf numFmtId="0"/><xf numFmtId="14"/>
-        |</cellXfs></styleSheet>""".stripMargin)
-    put("xl/worksheets/sheet1.xml",
+    XlsxFixtures.write(path, Seq("D" ->
       """<worksheet><sheetData>
         |<row r="1"><c r="A1" t="inlineStr"><is><t>when</t></is></c></row>
         |<row r="2"><c r="A2" s="1"><v>45000</v></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    zos.close()
+        |</sheetData></worksheet>""".stripMargin),
+      workbookPr = """<workbookPr date1904="1"/>""",
+      parts = Seq("xl/styles.xml" ->
+        """<styleSheet><cellXfs count="2"><xf numFmtId="0"/><xf numFmtId="14"/>
+          |</cellXfs></styleSheet>""".stripMargin))
     val df = ExcelSource.readXlsx(spark, path).head._2
     // 1904 epoch: 1904-01-01 + 45000 days, NOT the 1900-system 2023-03-15
     val want = java.time.LocalDate.of(1904, 1, 1).plusDays(45000).toString
@@ -194,29 +145,15 @@ class ExcelSpec extends SparkTestBase {
   }
 
   test("blank headers and rich-text inline runs") {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
     val path = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "xlsx_edge").resolve("e.xlsx").toString
-    val zos = new ZipOutputStream(new java.io.FileOutputStream(path))
-    def put(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    put("xl/workbook.xml",
-      """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-        | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-        |<sheets><sheet name="E" sheetId="1" r:id="rId1"/></sheets></workbook>""".stripMargin)
-    put("xl/_rels/workbook.xml.rels",
-      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-        |<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/></Relationships>""".stripMargin)
-    put("xl/worksheets/sheet1.xml",
+    XlsxFixtures.write(path, Seq("E" ->
       """<worksheet><sheetData>
         |<row r="1"><c r="A1" t="inlineStr"><is><t>($)</t></is></c>
         |  <c r="B1" t="inlineStr"><is><r><t>Hello </t></r><r><t>World</t></r></is></c></row>
         |<row r="2"><c r="A2"><v>7</v></c>
         |  <c r="B2" t="inlineStr"><is><r><t>a</t></r><r><t>b</t></r></is></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    zos.close()
+        |</sheetData></worksheet>""".stripMargin))
     val df = ExcelSource.readXlsx(spark, path).toMap.apply("E")
     // "($)" cleans to empty -> unnamed_0; rich-text header runs concatenate
     assert(df.columns.toSeq == Seq("unnamed_0", "hello_world"))
@@ -226,42 +163,20 @@ class ExcelSpec extends SparkTestBase {
 
   /** Hand-built minimal xlsx: S1 (shared strings + a sparse row), S2 (inline
     * string), Empty (header only). */
-  private def writeXlsx(path: String): Unit = {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
-    val zos = new ZipOutputStream(new java.io.FileOutputStream(path))
-    def put(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-    }
-    put("xl/workbook.xml",
-      """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-        | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-        |<sheets><sheet name="S1" sheetId="1" r:id="rId1"/>
-        |<sheet name="S2" sheetId="2" r:id="rId2"/>
-        |<sheet name="Empty" sheetId="3" r:id="rId3"/></sheets></workbook>""".stripMargin)
-    put("xl/_rels/workbook.xml.rels",
-      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-        |<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/>
-        |<Relationship Id="rId2" Type="t" Target="worksheets/sheet2.xml"/>
-        |<Relationship Id="rId3" Type="t" Target="worksheets/sheet3.xml"/></Relationships>""".stripMargin)
-    put("xl/sharedStrings.xml",
-      """<sst><si><t>id</t></si><si><t>name</t></si><si><t>val</t></si>
-        |<si><t>alpha</t></si></sst>""".stripMargin)
-    put("xl/worksheets/sheet1.xml",
-      """<worksheet><sheetData>
+  private def writeXlsx(path: String): Unit =
+    XlsxFixtures.write(path, Seq(
+      "S1" -> """<worksheet><sheetData>
         |<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c><c r="C1" t="s"><v>2</v></c></row>
         |<row r="2"><c r="A2"><v>1</v></c><c r="B2" t="s"><v>3</v></c><c r="C2"><v>1.5</v></c></row>
         |<row r="3"><c r="A3"><v>2</v></c><c r="C3"><v>2.5</v></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    put("xl/worksheets/sheet2.xml",
-      """<worksheet><sheetData>
+        |</sheetData></worksheet>""".stripMargin,
+      "S2" -> """<worksheet><sheetData>
         |<row r="1"><c r="A1" t="inlineStr"><is><t>col</t></is></c></row>
         |<row r="2"><c r="A2" t="inlineStr"><is><t>x</t></is></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    put("xl/worksheets/sheet3.xml",
-      """<worksheet><sheetData>
+        |</sheetData></worksheet>""".stripMargin,
+      "Empty" -> """<worksheet><sheetData>
         |<row r="1"><c r="A1" t="inlineStr"><is><t>only_header</t></is></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    zos.close()
-  }
+        |</sheetData></worksheet>""".stripMargin),
+      sharedStrings = Some("""<sst><si><t>id</t></si><si><t>name</t></si><si><t>val</t></si>
+        |<si><t>alpha</t></si></sst>""".stripMargin))
 }

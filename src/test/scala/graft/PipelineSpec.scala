@@ -5,7 +5,8 @@ import graft.pipeline.IngestionPipeline
 
 /** End-to-end ingestion pipeline spec: xlsx + csv inputs (one via file://
   * URL) → cleaned zstd parquet tables + catalog JSON + chunk collections
-  * with stub embeddings. */
+  * with stub embeddings. Workbooks are staged by [[XlsxFixtures]]; the
+  * reference's own `loan.xlsx` is pinned by LoanCatalogGoldenSpec. */
 class PipelineSpec extends SparkTestBase {
 
   test("full run over loan.xlsx and a csv produces tables, catalog, collections") {
@@ -19,8 +20,8 @@ class PipelineSpec extends SparkTestBase {
     val csvFile = new java.io.File(s"$out/in").listFiles()
       .find(_.getName.endsWith(".csv")).get.getAbsolutePath
 
-    val res = IngestionPipeline.run(spark,
-      Seq("/root/reference/loan.xlsx", s"file://$csvFile"), out)
+    val loanXlsx = XlsxFixtures.loanWorkbook(s"$out/loan.xlsx")
+    val res = IngestionPipeline.run(spark, Seq(loanXlsx, s"file://$csvFile"), out)
 
     assert(res.failed.isEmpty, s"unexpected failures: ${res.failed}")
     assert(res.files.size == 2)
@@ -45,7 +46,7 @@ class PipelineSpec extends SparkTestBase {
     assert(coll.filter(col("source_table") =!= "loan_data").count() == 0)
     // deterministic embeddings: re-running overwrites with identical bytes
     val sig1 = coll.agg(sum(abs(element_at(col("embedding"), 1)))).head.getDouble(0)
-    IngestionPipeline.run(spark, Seq("/root/reference/loan.xlsx"), out)
+    IngestionPipeline.run(spark, Seq(loanXlsx), out)
     val sig2 = spark.read.parquet(s"$out/collections/data_source_loan_data.parquet")
       .agg(sum(abs(element_at(col("embedding"), 1)))).head.getDouble(0)
     assert(math.abs(sig1 - sig2) < 1e-6)
@@ -125,8 +126,8 @@ class PipelineSpec extends SparkTestBase {
     val good = stageCsv(s"$out/in", "good_rows.csv",
       Seq("id,seg,bal", "1,BUILDING,10.5", "2,AUTO,20.25", "3,BUILDING,30.0"))
 
-    val res = IngestionPipeline.run(spark,
-      Seq("/root/reference/loan.xlsx", poison, good), out,
+    val loanXlsx = XlsxFixtures.loanWorkbook(s"$out/in/loan.xlsx")
+    val res = IngestionPipeline.run(spark, Seq(loanXlsx, poison, good), out,
       sessionId = "mixsess", resume = false)
 
     // the reference contract: two tables produced, one failure RECORDED
@@ -226,7 +227,7 @@ class PipelineSpec extends SparkTestBase {
         inside.decrementAndGet()
       })
     assert(res.failed.isEmpty && res.files.size == 5)
-    assert(calls.get == 25) // five stages per single-table input
+    assert(calls.get == 20) // four stages per single-table input
     assert(overlaps.get == 0)
   }
 
@@ -267,7 +268,7 @@ class PipelineSpec extends SparkTestBase {
     val inputs = stageMixed(s"$out/in")
     val task = new java.util.concurrent.FutureTask[IngestionPipeline.PipelineResult](() =>
       IngestionPipeline.run(spark, inputs, out, resume = false, stageSink = (name, _) =>
-        if (name == "profile") throw new InterruptedException("stop")))
+        if (name == "read_clean_write") throw new InterruptedException("stop")))
     new Thread(task, "pipeline-interrupt-caller").start()
     val err = intercept[java.util.concurrent.ExecutionException](
       task.get(180, java.util.concurrent.TimeUnit.SECONDS))
@@ -296,9 +297,7 @@ class PipelineSpec extends SparkTestBase {
     val out = "target/pipeline_resume"
     graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
     val in = new java.io.File(s"$out/in"); in.mkdirs()
-    val f1 = new java.io.File(in, "wb.xlsx")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/loan.xlsx"), f1.toPath)
+    val f1 = new java.io.File(XlsxFixtures.loanWorkbook(s"$out/in/wb.xlsx"))
 
     val r1 = IngestionPipeline.run(spark, Seq(f1.getPath), out)
     assert(r1.files.map(_.table) == Seq("wb_data") && r1.failed.isEmpty)
@@ -333,5 +332,103 @@ class PipelineSpec extends SparkTestBase {
     val r3 = IngestionPipeline.run(spark, Seq(f1.getPath, f2), out)
     assert(r3.failed.map(_.input) == Seq(f1.getPath))
     assert(r3.files.map(_.table) == Seq("extra"))
+  }
+
+  private def catalogEntries(res: IngestionPipeline.PipelineResult): Seq[graft.ops.CatalogOps.TableEntry] = {
+    import scala.jdk.CollectionConverters._
+    val m = new com.fasterxml.jackson.databind.ObjectMapper
+    m.readTree(res.catalogJson).elements().asScala
+      .map(e => graft.ops.CatalogOps.entryFromJson(m.writeValueAsString(e))).toSeq
+  }
+
+  test("a header-only csv lands as an empty table with a zero-null profile") {
+    val out = "target/pipeline_header_only"
+    graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
+    val empty = stageCsv(s"$out/in", "empty.csv", Seq("id,name"))
+    val one = stageCsv(s"$out/in", "one.csv", Seq("id,name", "1,a"))
+    val res = IngestionPipeline.run(spark, Seq(empty, one), out, resume = false)
+    assert(res.failed.isEmpty, s"unexpected failures: ${res.failed}")
+    assert(res.files.map(f => (f.table, f.rows)) == Seq(("empty", 0L), ("one", 1L)))
+    val entries = catalogEntries(res).map(e => e.logicalName -> e).toMap
+    assert(entries("empty").rowCount == 0L)
+    assert(entries("empty").columns.map(c => (c.name, c.nNulls, c.nDistinct)) ==
+      Seq(("id", 0L, 0L), ("name", 0L, 0L)))
+    assert(entries("one").rowCount == 1L && entries("one").columns.forall(_.nNulls == 0L))
+    assert(spark.read.parquet(s"$out/collections/data_source_empty.parquet").count() == 0L)
+  }
+
+  test("the profile observed in the write equals an aggregate over the written parquet") {
+    import spark.implicits._
+    import graft.ops.ProfileOps
+    val out = "target/pipeline_profile"
+    graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
+    val in = s"$out/in"
+    // nulls in two columns, repeats in every column but the key
+    val rows = (0 until 40).map { i =>
+      (i, if (i % 7 == 0) None else Some(s"n${i % 9}"),
+        if (i % 5 == 0) None else Some(i % 11 * 0.25), i % 3 == 0, s"2024-01-${1 + i % 28}")
+    }
+    val header = Seq("id", "name", "score", "flag", "day")
+    def field(v: Any): Any = v match { case None => null; case Some(x) => x; case x => x }
+    val plain = rows.map(_.productIterator.map(field).toSeq)
+    def delimited(sep: String) = header.mkString(sep) +:
+      plain.map(_.map(v => if (v == null) "" else v.toString).mkString(sep))
+    val json = plain.map(r => header.zip(r).filter(_._2 != null).map {
+      case (k, v: String) => s""""$k": "$v""""
+      case (k, v) => s""""$k": $v"""
+    }.mkString("{", ", ", "}")).mkString("[", ",\n", "]")
+    val inputs = Seq(stageCsv(in, "c.csv", delimited(",")),
+      stageCsv(in, "t.tsv", delimited("\t")), stageCsv(in, "j.json", Seq(json)),
+      s"$in/p.parquet", s"$in/x.xlsx")
+    rows.toDF(header: _*).coalesce(1).write.parquet(inputs(3))
+    XlsxFixtures.write(inputs(4), Seq("Rows" -> XlsxFixtures.sheetXml(header, plain)))
+    val res = IngestionPipeline.run(spark, inputs, out, resume = false)
+    assert(res.failed.isEmpty, s"unexpected failures: ${res.failed}")
+    val entries = catalogEntries(res)
+    assert(entries.map(_.logicalName) == Seq("c", "t", "j", "p", "x_rows"))
+    entries.foreach { e =>
+      // the separate profiling aggregate the pipeline ran before fusing it
+      // into the write, over a fresh schema inference of the written table
+      val written = spark.read.parquet(e.parquetPath)
+      val fields = written.schema.fields.toSeq
+      val aggs = count(lit(1)) +: fields.flatMap(f => Seq(
+        sum(when(col(f.name).isNull, 1L).otherwise(0L)),
+        approx_count_distinct(col(f.name).cast("string"), 0.05)))
+      val row = written.agg(aggs.head, aggs.tail: _*).head()
+      assert(e.rowCount == row.getLong(0) && e.rowCount == 40L, e.logicalName)
+      assert(e.columns.map(c => (c.name, c.dataType, c.nNulls, c.nDistinct)) ==
+        fields.zipWithIndex.map { case (f, i) =>
+          (f.name, ProfileOps.duckTypeName(f.dataType), row.getLong(1 + 2 * i), row.getLong(2 + 2 * i))
+        }, e.logicalName)
+      // the seeded re-read schema is the one inference returns
+      assert(graft.ops.Tables.read(spark, e.parquetPath).schema == written.schema, e.logicalName)
+    }
+  }
+
+  test("ingesting a single-block csv runs no schema job and, after the write, only the chunk collection") {
+    val out = "target/pipeline_jobs"
+    graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
+    val csv = stageCsv(s"$out/in", "few.csv", "k,v" +: (1 to 50).map(i => s"$i,v${i % 4}"))
+    val (res, jobs) = withJobs(IngestionPipeline.run(spark, Seq(csv), out, resume = false))
+    assert(res.failed.isEmpty && res.files.map(_.rows) == Seq(50L))
+    assert(!jobs.exists(_.startsWith("parquet at Tables.scala")), jobs)
+    val write = jobs.lastIndexWhere(_.startsWith("parquet at IngestOps.scala"))
+    assert(write >= 0, jobs)
+    // the same chunk collection, written on its own, starts the same jobs
+    val pq = res.files.head.parquetPath
+    val (_, chunkJobs) = withJobs(IngestionPipeline.writeCollection(
+      IngestionPipeline.chunkTable(graft.ops.Tables.read(spark, pq), "k", 1000, rowHint = Some(50L)),
+      "few", s"$out/again"))
+    assert(chunkJobs.nonEmpty && jobs.drop(write + 1) == chunkJobs, jobs)
+  }
+
+  test("a single-block chunkTable plans one shuffle and no broadcast") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    val docs = graft.ops.Tables.t(spark, sf, "documents")
+    val plan = IngestionPipeline.chunkTable(docs, "doc_id", 500).queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, plan)
+    assert(helper.collect(plan) { case e: BroadcastExchangeExec => e }.isEmpty, plan)
   }
 }

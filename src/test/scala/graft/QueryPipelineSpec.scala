@@ -89,6 +89,31 @@ class QueryPipelineSpec extends SparkTestBase {
     assert(schemaJobs.isEmpty, s"schema-inference jobs on the second run: $schemaJobs")
   }
 
+  test("registerViews rebuilds a view only when its dataset or the registered view changed") {
+    val out = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "qp_views").toString
+    val path = s"$out/t.parquet"
+    spark.range(3).toDF("id").write.parquet(path)
+    val entry = CatalogOps.TableEntry("qp_views_t", path, 3L, Nil)
+    val views = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog
+    def view = views.getRawTempView("qp_views_t").get
+    QueryPipeline.registerViews(spark, Seq(entry))
+    val first = view
+    QueryPipeline.registerViews(spark, Seq(entry))
+    assert(view eq first, "an unchanged view was rebuilt")
+    // another caller takes the name: the next registration restores the table
+    spark.range(7).toDF("id").createOrReplaceTempView("qp_views_t")
+    QueryPipeline.registerViews(spark, Seq(entry))
+    assert(spark.table("qp_views_t").count() == 3)
+    val second = view
+    // the dataset is rewritten: the view follows it
+    spark.range(5).toDF("id").write.mode("overwrite").parquet(path)
+    QueryPipeline.registerViews(spark, Seq(entry))
+    assert(!(view eq second), "a view over a rewritten dataset was kept")
+    assert(spark.table("qp_views_t").count() == 5)
+  }
+
   test("template generator chains THREE named tables on inferred keys") {
     import org.apache.spark.sql.functions._
     // the reference tool contract covers "two or more tables"
