@@ -14,9 +14,10 @@ import graft.pipeline.IngestionPipeline
 class LoanCatalogGoldenSpec extends SparkTestBase {
 
   test("loan.xlsx full catalog entry matches the checked-in golden byte-for-byte") {
+    assumeReferenceLoanXlsx()
     val out = "target/loan_golden"
     graft.ops.VectorOps.deleteRecursively(new java.io.File(out))
-    val res = IngestionPipeline.run(spark, Seq("/root/reference/loan.xlsx"), out)
+    val res = IngestionPipeline.run(spark, Seq(referenceLoanXlsx), out)
     assert(res.files.map(_.table) == Seq("loan_data"))
     val entry = CatalogOps
       .profileTable(spark, s"$out/parquet_files", "loan_data")

@@ -16,9 +16,10 @@ import graft.pipeline.IngestionPipeline
 class LoanDemoSpec extends SparkTestBase {
 
   test("demo flow convert -> schema -> count matches raw-XML goldens") {
+    assumeReferenceLoanXlsx()
     val out = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "loan_demo").toString
-    val res = IngestionPipeline.run(spark, Seq("/root/reference/loan.xlsx"), out)
+    val res = IngestionPipeline.run(spark, Seq(referenceLoanXlsx), out)
 
     // CONVERT: the single sheet "Data" -> one table under the reference's
     // {base}_{sheet} naming (duckdb_util.py:302-306), 1000 data rows

@@ -156,7 +156,8 @@ class QueryPipelineSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val out = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "qp_loan").toString
-    val res = IngestionPipeline.run(spark, Seq("/root/reference/loan.xlsx"), out)
+    val res = IngestionPipeline.run(spark,
+      Seq(XlsxFixtures.loanWorkbook(s"$out/loan.xlsx")), out)
     val catalog = Seq(
       CatalogOps.profileTable(spark, s"$out/parquet_files", res.files.head.table))
     val df = spark.read.parquet(res.files.head.parquetPath)
@@ -271,7 +272,8 @@ class QueryPipelineSpec extends SparkTestBase {
     // DEFAULT hooks (no canned generator), then summarized
     val out = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "qp_multi").toString
-    val res = IngestionPipeline.run(spark, Seq("/root/reference/loan.xlsx"), out)
+    val res = IngestionPipeline.run(spark,
+      Seq(XlsxFixtures.loanWorkbook(s"$out/loan.xlsx")), out)
     val catalog = Seq(
       CatalogOps.profileTable(spark, s"$out/parquet_files", res.files.head.table),
       CatalogOps.profileTable(spark, sf, "orders"),

@@ -15,6 +15,17 @@ trait SparkTestBase extends AnyFunSuite {
 
   def sf: String = "/root/testdata/sf0.001"
 
+  /** The reference's own workbook (FIXTURES.md §A). The specs that check
+    * against ground truth taken from this exact file call
+    * [[assumeReferenceLoanXlsx]] first, so they cancel where it is absent;
+    * the rest stage `XlsxFixtures.loanWorkbook` instead. */
+  val referenceLoanXlsx: String = "/root/reference/loan.xlsx"
+
+  def assumeReferenceLoanXlsx(): Unit =
+    assume(java.nio.file.Files.exists(java.nio.file.Paths.get(referenceLoanXlsx)),
+      s"$referenceLoanXlsx is absent; its real-workbook checks need that file " +
+        "(FIXTURES.md §A)")
+
   /** `body`'s result and the stage names of every Spark job it started. */
   def withJobs[T](body: => T): (T, Seq[String]) = {
     import org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty

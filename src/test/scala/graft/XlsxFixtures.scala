@@ -81,7 +81,9 @@ object XlsxFixtures {
   /** A one-sheet (`Data`) workbook of 1000 seeded loan applications with
     * the reference fixture's columns and types: a unique string key first,
     * and nulls in `collateral`, `approved_amount` and
-    * `repayment_start_date`. Returns `path`. */
+    * `repayment_start_date`. Its dates fall in 2025, as the real workbook
+    * holds applications in H1 2025 that the loan-demo date questions ask
+    * for. Returns `path`. */
   def loanWorkbook(path: String): String = {
     val rows = 1000
     val r = new scala.util.Random(17L)
@@ -98,9 +100,9 @@ object XlsxFixtures {
         pick(Seq("Monthly", "Quarterly", "Annually")), (r.nextInt(2000) + 100) / 100.0,
         pick(Seq(12, 36, 60, 120)),
         if (r.nextInt(3) == 0) null else pick(Seq("Car", "House", "Savings")),
-        f"2024-$month%02d-${1 + r.nextInt(28)}%02d",
+        f"2025-$month%02d-${1 + r.nextInt(28)}%02d",
         if (approved) amount * 0.9 else null,
-        if (approved) f"2024-${math.min(12, month + 1)}%02d-01" else null,
+        if (approved) f"2025-${math.min(12, month + 1)}%02d-01" else null,
         r.nextBoolean(), math.round(amount / 36.0 * 100) / 100.0)
     }
     write(path, Seq("Data" -> sheetXml(loanColumns, data)))
