@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
   * rather than assumed.
   *
   * Inputs per mult unit: one `customer_<i>.csv` (1.5k rows at sf0.01),
-  * one `orders_<i>.csv` (15k rows), and one xlsx workbook copy — the
-  * reference's own demo surface (spreadsheet + delimited files). CSVs are
+  * one `orders_<i>.csv` (15k rows), and one copy of the reference's
+  * `loan.xlsx` — its own demo surface (spreadsheet + delimited files). The
+  * run fails, naming the file, when that workbook is absent. CSVs are
   * staged once from the sf parquet tables and byte-copied per replica, so
   * scaling multiplies INPUT COUNT (the pipeline's unit of work — per-file
   * fetch/read/write/chunk), not row count per file.
@@ -63,7 +64,11 @@ object BenchIngest {
     }
     val custCsv = stageCsv("customer")
     val ordCsv = stageCsv("orders")
+    // the workbook is one of the three inputs per mult unit: without it
+    // the run would time CSV-only ingest, not comparable with a full one
     val xlsxSrc = new java.io.File("/root/reference/loan.xlsx")
+    require(xlsxSrc.isFile,
+      s"BenchIngest needs the reference workbook $xlsxSrc (FIXTURES.md, section A); it is absent")
     val inputs: Seq[String] = (0 until mult).flatMap { i =>
       def rep(src: java.io.File, name: String): String = {
         val dst = new java.io.File(inputsDir, name)
@@ -71,8 +76,8 @@ object BenchIngest {
           java.nio.file.Files.copy(src.toPath, dst.toPath)
         dst.toString
       }
-      Seq(rep(custCsv, s"customer_$i.csv"), rep(ordCsv, s"orders_$i.csv")) ++
-        (if (xlsxSrc.exists()) Seq(rep(xlsxSrc, s"loan_$i.xlsx")) else Nil)
+      Seq(rep(custCsv, s"customer_$i.csv"), rep(ordCsv, s"orders_$i.csv"),
+        rep(xlsxSrc, s"loan_$i.xlsx"))
     }
 
     // ---- timed runs -----------------------------------------------------

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import Tables._
 
@@ -450,75 +451,89 @@ object VectorOps {
 
   /** K-means-trained IVF for corpora that do NOT ship a pre-assigned list
     * column (the `label`-based build above serves pre-clustered data; real
-    * embedding tables rarely arrive clustered). The canonical Lloyd loop,
-    * each iteration two distributed passes: ASSIGN — argmax cosine against
-    * the broadcast centroid table (O(nlist) work per row, no shuffle) —
-    * and RE-CENTER — per-(list, dim) average (the `buildCentroids` shape,
-    * bounded-key agg). Init is the deterministic
-    * hash-ordered sample (nlist smallest xxhash64(vec_id) — no RNG, so
-    * rebuilds are reproducible and the artifact cache stays
-    * content-addressed, and no id-density assumption: sparse/offset id
-    * spaces seed fully); a list that loses all members simply drops out.
-    * Per-round centroids are localCheckpoint'd (they are nlist tiny rows)
-    * so iteration N+1 does not replay iteration N's full assign pass;
-    * superseded rounds are freed immediately, and the caller frees the
-    * final round once the artifact is written. The returned assignment is
-    * recomputed against the FINAL centroids, so probe-time routing and the
-    * centroid table are always mutually consistent. */
+    * embedding tables rarely arrive clustered). The canonical Lloyd loop in
+    * MLlib k-means' shape: the centroids (nlist × dim floats) live on the
+    * driver, and each round is ONE scan with ONE small shuffle. ASSIGN is a
+    * narrow projection against the centroids broadcast as one array row
+    * ([[assignLists]]: argmax cosine, O(nlist) work per row, no shuffle, no
+    * join back to the vectors); RE-CENTER is the per-(list, dim) average of
+    * `buildCentroids` (posexplode + groupBy(list, dim) + avg, the one
+    * shuffle), whose nlist·dim cells are collected and assembled into
+    * arrays on the driver with the same float cast. Nothing is
+    * checkpointed: round N+1 starts from driver values, so it never
+    * replays round N. Init is the deterministic hash-ordered sample (the
+    * nlist smallest xxhash64(vec_id), collected by TakeOrderedAndProject
+    * and labelled by rank on the driver) — no RNG, so rebuilds are
+    * reproducible and the artifact cache stays content-addressed, and no
+    * id-density assumption: sparse/offset id spaces seed fully. A list
+    * that loses all members simply drops out, and an empty corpus
+    * collects no seeds and yields an empty artifact (a freshly created
+    * collection IS empty on day one). `vec_id` is the corpus key. The
+    * returned assignment is computed against the FINAL centroids, so
+    * probe-time routing and the centroid table are always mutually
+    * consistent. */
   def trainIvf(e: DataFrame, nlist: Int, iters: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint
     val v = e.select(col("vec_id"), col("embedding"))
-    val maxIdRow = v.agg(max(col("vec_id"))).head
-    if (maxIdRow.isNullAt(0)) {
-      // empty training set — degrade to an empty artifact (probes then
-      // return zero rows with the right schema), never a null-read throw:
-      // at 100 TB a freshly-created collection IS empty on day one
-      val empty = v.limit(0).select(lit(0).cast("int").as("label"),
-        col("embedding").as("centroid"))
-      return (empty.localCheckpoint(), assignLists(v, empty))
-    }
-    // INIT (r14): the nlist vectors with the smallest xxhash64(vec_id) —
-    // a deterministic, RNG-free pseudo-random sample that lowers to
-    // TakeOrderedAndProject (per-partition heaps, no global sort). The
-    // previous stride-over-id-VALUES sample assumed DENSE ids: on a
-    // corpus whose ids are sparse or offset (deletes, unions, the
-    // planted-twin bench corpus with ids 0..35k ∪ 1M..1.004M) almost no
-    // sampled id existed, the init collapsed to one seed, and k-means
-    // degenerated to a single list. Hash-ordered seeds exist by
-    // construction. Labels = rank in hash order (a window over nlist
-    // tiny rows, one task).
-    val hw = org.apache.spark.sql.expressions.Window
-      .orderBy(col("h"), col("vec_id"))
-    var centroids = v
-      .select(col("vec_id"), col("embedding"), xxhash64(col("vec_id")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(nlist)
-      .select((row_number().over(hw) - 1).cast("int").as("label"),
-        col("embedding").as("centroid"))
-      .localCheckpoint()
+    val schema = StructType(Seq(StructField("label", IntegerType),
+      StructField("centroid", ArrayType(FloatType))))
+    var cents: Seq[Row] = v.orderBy(xxhash64(col("vec_id")), col("vec_id"))
+      .limit(nlist).select(col("embedding")).collect().toSeq
+      .zipWithIndex.map { case (r, label) => Row(label, r.get(0)) }
     (1 to iters).foreach { _ =>
-      val assign = assignLists(v, centroids)
-      val next = buildCentroids(v.join(assign, "vec_id")
-        .select(col("label"), col("embedding"))).localCheckpoint()
-      unpersistCheckpoint(centroids)
-      centroids = next
+      cents = withLists(v, cents, schema)
+        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
+        .groupBy("label", "pos").agg(avg(col("v")).as("cv"))
+        .collect().toSeq.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map { case (label, cells) =>
+          Row(label, cells.sortBy(_.getInt(1))
+            .map(c => if (c.isNullAt(2)) null else c.getDouble(2).toFloat))
+        }
     }
-    (centroids, assignLists(v, centroids))
+    // nlist rows: one partition, so the artifact writes one file
+    val centroids = v.sparkSession.createDataFrame(
+      java.util.Arrays.asList(cents: _*), schema).coalesce(1)
+    (centroids, withLists(v, cents, schema).select(col("vec_id"), col("label")))
   }
 
-  /** Argmax-cosine list assignment against a broadcast centroid table —
-    * ties break to the LOWEST list id, matching the probe tie-break. */
-  def assignLists(e: DataFrame, centroids: DataFrame): DataFrame =
-    e.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("label"),
-        cosineFast(col("embedding"), col("centroid")).as("cs"))
-      .groupBy("vec_id")
-      .agg(max_by(col("label"), struct(col("cs"), -col("label"))).as("label"))
+  /** `v` (vec_id, embedding) with each row's `label`: the argmax cosine
+    * over the driver-held centroid rows `cents` (shaped by `schema`,
+    * (label, centroid)), broadcast as ONE row `array<struct<label,
+    * centroid>>`. The per-row pick is `array_max` over (cosine, -label,
+    * label), the order of `max_by(label, struct(cosine, -label))`: the
+    * highest cosine wins (a NaN cosine ranks above every number, a null
+    * one below), a tie goes to the LOWEST list id, matching the probe
+    * tie-break. A narrow projection: no shuffle, no join back. No
+    * centroids, no rows. */
+  private def withLists(v: DataFrame, cents: Seq[Row], schema: StructType): DataFrame = {
+    val row = v.sparkSession.createDataFrame(java.util.Collections.singletonList(Row(cents)),
+      StructType(Seq(StructField("cents", ArrayType(schema, containsNull = false)))))
+    val best = array_max(transform(col("cents"), c => struct(
+      cosineFast(col("embedding"), c.getField("centroid")).as("cs"),
+      (-c.getField("label")).as("neg_label"), c.getField("label").as("label"))))
+    val out = v.crossJoin(broadcast(row))
+      .select(col("vec_id"), col("embedding"), best.getField("label").as("label"))
+    if (cents.isEmpty) out.limit(0) else out
+  }
+
+  /** Argmax-cosine list assignment (vec_id, label) against a centroid table
+    * (label, centroid): the table is collected to the driver (nlist rows)
+    * and each vector is labelled by the narrow projection `trainIvf`'s
+    * rounds use — ties break to the LOWEST list id, matching the probe
+    * tie-break; no shuffle, no join back. An empty centroid table assigns
+    * no rows. */
+  def assignLists(e: DataFrame, centroids: DataFrame): DataFrame = {
+    val c = centroids.select(col("label"), col("centroid"))
+    withLists(e.select(col("vec_id"), col("embedding")), c.collect().toSeq, c.schema)
+      .select(col("vec_id"), col("label"))
+  }
 
   /** The TRAINED IVF artifact: `centroids/` and the final `assign/`
     * (vec_id → list) under one fingerprint-named dir. The one commit
     * marker covers the PAIR of tables: a reader must never see committed
-    * centroids with absent assignments. */
+    * centroids with absent assignments. Training ([[trainIvf]]) holds the
+    * centroids on the driver and runs one shuffle per Lloyd round with no
+    * checkpoints; the writes are one assignment scan and one write of the
+    * nlist driver-held rows. */
   def ensureTrainedIvf(s: SparkSession, sf: String, nlist: Int = 16,
       iters: Int = 2): String =
     ArtifactStore.ensure("ivf_trained",
@@ -531,7 +546,6 @@ object VectorOps {
       centroids.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd")
         .parquet(new java.io.File(tmp, "centroids").toString)
-      org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint(centroids)
     }
 
   /** Append a batch of new vectors to a TRAINED IVF artifact WITHOUT

@@ -392,7 +392,6 @@ class ScaleOpsSpec extends SparkTestBase {
     baseAssign.write.parquet(s"$tmp/base/assign")
     centroids.write.parquet(s"$tmp/base/centroids")
     VectorOps.appendTrainedIvf(spark, s"$tmp/base", delta, s"$tmp/appended")
-    org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint(centroids)
     assert(new java.io.File(s"$tmp/appended", "_GRAFT_OK").exists())
     val cFrozen = spark.read.parquet(s"$tmp/appended/centroids")
     val merged = spark.read.parquet(s"$tmp/appended/assign")

@@ -333,7 +333,6 @@ class StreamingSpec extends SparkTestBase {
       VectorOps.trainIvf(e.filter(col("vec_id") < cut), nlist = 4, iters = 1)
     baseAssign.write.parquet(s"$tmp/ivf/assign")
     centroids.write.parquet(s"$tmp/ivf/centroids")
-    org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint(centroids)
     // the delta arrives as a stream, split across two micro-batches
     val delta = e.filter(col("vec_id") >= cut).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
