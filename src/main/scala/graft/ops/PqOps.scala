@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import Tables._
 
 /** X28: product quantization (PQ) — the memory-compression half of
@@ -32,13 +33,13 @@ import Tables._
   * better): raw ADC recall@10 ≈ 0.65, shortlist-50 + exact re-rank ≈
   * 1.0.
   *
-  * Determinism: codebook init is the same hash-ordered, RNG-free sample
-  * as the trained IVF (`VectorOps.trainIvf`); encode assignment is
-  * argmin-L2 with ties to the LOWEST code id; per-(sub,code) ADC partials
-  * collapse to micro-ints BEFORE the per-vector sum, so scores are
-  * order-free integer sums. Approximate by construction → no DuckDB
-  * oracle; PqOpsSpec proves code-range/completeness, encode determinism,
-  * pointwise append equality, and recall vs the exact ranking.
+  * Determinism: codebooks are trained on the driver from the same
+  * hash-ordered, RNG-free sample as the trained IVF (`VectorOps.trainIvf`);
+  * assignment is argmin-L2 with ties to the LOWEST code id; per-(sub,code)
+  * ADC partials collapse to micro-ints BEFORE the per-vector sum, so
+  * scores are order-free integer sums. Approximate → no DuckDB oracle;
+  * PqOpsSpec proves code-range/completeness, encode determinism, pointwise
+  * append equality and recall; PqTrainSpec, row-equality to the old loop.
   *
   * Reference analog: the Chroma HNSW collection (`chroma_ingestion_util
   * .py:278-282`) is the reference's only ANN structure; PQ/IVF-PQ is the
@@ -69,92 +70,80 @@ object PqOps {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (s, x) => s + x)
 
-  /** (vec_id, sub, subvec): each normalized vector split into M contiguous
-    * DSUB-dim subvectors — one explode, M rows per vector, no shuffle. */
-  def subvectors(e: DataFrame): DataFrame =
-    e.select(col("vec_id"), unitNorm(col("embedding")).as("nv"))
-      .select(col("vec_id"), explode(array((0 until M).map(j =>
-        struct(lit(j).as("sub"),
-          slice(col("nv"), j * DSUB + 1, DSUB).as("subvec"))): _*)).as("sv"))
-      .select(col("vec_id"), col("sv.sub").as("sub"), col("sv.subvec").as("subvec"))
+  /** Subvector `sub` of the normalized vector `nv`: DSUB contiguous dims. */
+  private def subvec(nv: Column, sub: Column): Column =
+    slice(nv, sub * DSUB + 1, lit(DSUB))
 
-  /** Argmin-L2 code assignment against a broadcast codebook table — ties
-    * break to the LOWEST code id (the probe-side ordering convention of
-    * the whole vector family). Returns (vec_id, sub, code). */
-  def assignCodes(sv: DataFrame, books: DataFrame): DataFrame =
-    sv.join(broadcast(books), Seq("sub"))
-      .select(col("vec_id"), col("sub"), col("code"),
-        l2(col("subvec"), col("centroid")).as("d2"))
-      .groupBy("vec_id", "sub")
-      .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"))
+  /** The codebook table: one row per (subspace, code). */
+  private val bookSchema = StructType(Seq(StructField("sub", IntegerType, nullable = false),
+    StructField("code", IntegerType), StructField("centroid", ArrayType(DoubleType))))
+  private val subBookSchema = StructType(Seq(bookSchema("sub"), StructField("book",
+    ArrayType(StructType(bookSchema.drop(1)), containsNull = false))))
 
-  /** Lloyd re-center: per-(sub, code) elementwise mean, fully distributed
-    * (posexplode + groupBy on (sub, code, dim)) — the subspace analog of
-    * `VectorOps.buildCentroids`. A code that attracts no members this
-    * round drops out of the book (encode still totals M codes/vector:
-    * argmin runs over the surviving codes). */
-  def recenter(sv: DataFrame, assign: DataFrame): DataFrame =
-    sv.join(assign, Seq("vec_id", "sub"))
-      .select(col("sub"), col("code"), posexplode(col("subvec")).as(Seq("pos", "v")))
-      .groupBy("sub", "code", "pos").agg(avg(col("v")).as("cv"))
-      .groupBy("sub", "code")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
-        x => x.getField("cv")).as("centroid"))
-
-  /** Train the M per-subspace codebooks: deterministic hash-ordered init
-    * (the KSUB vectors with the smallest xxhash64(vec_id) seed the codes —
-    * no RNG, so the artifact stays content-addressed, and no density
-    * assumption on the id space), then `iters` Lloyd rounds. Each round
-    * is two keyed shuffles over the subvector frame
-    * (assignment is a broadcast join; re-centering is keyed on
-    * (sub, code, dim) — KSUB·M·DSUB groups). Returns the codebook frame
-    * (sub, code, centroid), persisted via localCheckpoint; the caller
-    * owns (and frees) it. */
-  def trainPq(e: DataFrame, iters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint
-    val sv = subvectors(e).localCheckpoint() // reused by every round
-    try {
-      val maxIdRow = e.agg(max(col("vec_id"))).head
-      if (maxIdRow.isNullAt(0)) {
-        // empty training set — empty codebooks with the right schema (the
-        // encode/probe paths then emit zero rows), same degradation rule
-        // as VectorOps.trainIvf
-        return sv.limit(0).select(col("sub"), lit(0).cast("int").as("code"),
-          col("subvec").as("centroid")).localCheckpoint()
-      }
-      // INIT (r14): seed codes from the KSUB vectors with the smallest
-      // xxhash64(vec_id) — the same deterministic hash-ordered sample as
-      // VectorOps.trainIvf, for the same reason: the old stride-over-id-
-      // VALUES sample collapsed to one seed on sparse/offset id spaces
-      // (every code identical ⇒ flat ADC). TakeOrderedAndProject +
-      // a window over KSUB tiny rows.
-      val hw = org.apache.spark.sql.expressions.Window
-        .orderBy(col("h"), col("vec_id"))
-      val seeds = e.select(col("vec_id"), xxhash64(col("vec_id")).as("h"))
-        .orderBy(col("h"), col("vec_id")).limit(KSUB)
-        .select(col("vec_id"),
-          (row_number().over(hw) - 1).cast("int").as("code"))
-      var books = sv.join(broadcast(seeds), "vec_id")
-        .select(col("sub"), col("code"), col("subvec").as("centroid"))
-        .localCheckpoint()
-      (1 to iters).foreach { _ =>
-        val next = recenter(sv, assignCodes(sv, books)).localCheckpoint()
-        unpersistCheckpoint(books)
-        books = next
-      }
-      books
-    } finally unpersistCheckpoint(sv)
+  /** Per vector, `array<struct<sub, code>>`: the argmin-L2 code of each
+    * subvector of `nv` against the driver-held `books` (bookSchema rows,
+    * one [[Tables.rowsLit]]). `array_min` over (d2, code) keeps the order of
+    * `min_by(code, struct(d2, code))`: a null distance ranks below every
+    * number, a NaN one above, ties go to the LOWEST code. `nv` is bound
+    * once per row by a lambda over a one-element array (inlined, it would
+    * be evaluated M·KSUB times). */
+  private def argminCodes(nv: Column, books: Seq[Row]): Column = {
+    val bySub = books.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (sub, rows) => Row(sub, rows.map(r => Row(r.getInt(1), r.get(2)))) }
+    flatten(transform(array(nv), v =>
+      transform(rowsLit(bySub, subBookSchema), s => struct(s.getField("sub").as("sub"),
+        array_min(transform(s.getField("book"), b => struct(
+          l2(subvec(v, s.getField("sub")), b.getField("centroid")).as("d2"),
+          b.getField("code").as("code")))).getField("code").as("code")))))
   }
 
-  /** Encode a corpus: M codes per vector, ordered by subspace. Pointwise
+  /** [[trainPq]]'s books, held on the driver as bookSchema rows. */
+  private def train(e: DataFrame, iters: Int): Seq[Row] = {
+    val v = e.select(unitNorm(col("embedding")).as("nv"))
+    var books: Seq[Row] = e.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(KSUB)
+      .select(transform(sequence(lit(0), lit(M - 1)), subvec(unitNorm(col("embedding")), _)))
+      .collect().toSeq.zipWithIndex.flatMap { case (r, code) =>
+        r.getSeq[Any](0).zipWithIndex.map { case (sv, sub) => Row(sub, code, sv) }
+      }
+    (1 to iters).foreach { _ =>
+      books = v.select(col("nv"), inline(argminCodes(col("nv"), books)))
+        .select(col("sub"), col("code"),
+          posexplode(subvec(col("nv"), col("sub"))).as(Seq("pos", "v")))
+        .groupBy("sub", "code", "pos").agg(avg(col("v")).as("cv"))
+        .collect().toSeq.groupBy(r => (r.getInt(0), r.getInt(1))).toSeq.sortBy(_._1)
+        .map { case ((sub, code), cs) => Row(sub, code, cs.sortBy(_.getInt(2)).map(_.get(3))) }
+    }
+    books
+  }
+
+  /** Driver-held books as a one-partition frame (one codebook file). */
+  private def bookFrame(s: SparkSession, books: Seq[Row]): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(books: _*), bookSchema).coalesce(1)
+
+  /** Train the M codebooks (sub, code, centroid) on the driver, in
+    * `VectorOps.trainIvf`'s shape: the KSUB vectors with the smallest
+    * xxhash64(vec_id) seed the codes (one TakeOrderedAndProject collect; no
+    * RNG, no id-density assumption), then each Lloyd round is one
+    * [[argminCodes]] scan and one (sub, code, dim) average shuffle whose
+    * M·KSUB·DSUB cells become the next books. No checkpoints. A code with
+    * no members drops out of its book; an empty corpus gives empty books. */
+  def trainPq(e: DataFrame, iters: Int = 2): DataFrame =
+    bookFrame(e.sparkSession, train(e, iters))
+
+  private def encode(e: DataFrame, books: Seq[Row]): DataFrame = {
+    val out = e.select(col("vec_id"), transform(
+      argminCodes(unitNorm(col("embedding")), books), x => x.getField("code")).as("codes"))
+    if (books.isEmpty) out.limit(0) else out
+  }
+
+  /** Encode a corpus: (vec_id, codes), M codes per vector ordered by
+    * subspace, by the training rounds' narrow projection against the
+    * collected books: no shuffle, and no books encode no rows. Pointwise
     * per vector (PqOpsSpec proves encode(base ∪ delta) == encode(base) ∪
     * encode(delta)), so corpus appends encode only the delta — the same
     * append discipline as the IVF assignment and the posting segments. */
   def encodePq(e: DataFrame, books: DataFrame): DataFrame =
-    assignCodes(subvectors(e), books)
-      .groupBy("vec_id")
-      .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
-        x => x.getField("code")).as("codes"))
+    encode(e, books.select("sub", "code", "centroid").collect().toSeq)
 
   /** ADC lookup table for one query: per-(sub, code) partial squared-L2
     * between the normalized query's subvector and the codebook centroid —
@@ -179,21 +168,20 @@ object PqOps {
       .agg(sum(col("pd_e6")).as("adc_d2_e6"))
 
   /** The PQ artifact: `codebooks/` + `codes/` under one
-    * content-fingerprinted dir, committed as a PAIR by the one marker.
-    * Recorded as the oracle input "pq" for the DuckDB replay. */
+    * content-fingerprinted dir, committed as a PAIR by the one marker,
+    * both written from the driver-held books. Recorded as the oracle
+    * input "pq" for the DuckDB replay. */
   def ensurePq(s: SparkSession, sf: String, iters: Int = 2): String =
     ArtifactStore.record("pq", ArtifactStore.ensure("pq",
         ArtifactStore.sourceName(sf, "embeddings", s"pq:$M:$KSUB:$iters:v2")) { tmp =>
       val e = t(s, sf, "embeddings")
-      val books = trainPq(e, iters)
-      books.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      val books = train(e, iters)
+      bookFrame(s, books).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd")
         .parquet(new java.io.File(tmp, "codebooks").toString)
-      encodePq(e, read(s, new java.io.File(tmp, "codebooks").toString))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      encode(e, books).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd")
         .parquet(new java.io.File(tmp, "codes").toString)
-      org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint(books)
     })
 
   /** Exact-cosine re-rank of an ADC shortlist: the raw embeddings are

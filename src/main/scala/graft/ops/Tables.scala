@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StructType,
+  TimestampNTZType, TimestampType}
 
 /** Table access + numeric-determinism helpers shared by every operator.
   *
@@ -185,6 +186,13 @@ object Tables {
     val nb  = aggregate(bd, lit(0.0), (s, x) => s + x * x)
     dot / (sqrt(na) * sqrt(nb))
   }
+
+  /** Driver-held `rows` as one literal `array<struct>` column: they ride in
+    * the task binary, where a `createDataFrame` + `broadcast` first
+    * collects them through a one-task job. */
+  def rowsLit(rows: Seq[org.apache.spark.sql.Row], schema: StructType): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(rows, ArrayType(schema, false)))
 
   /** Codegen'd fused cosine — bit-identical results to `cosine` (same
     * sequential double accumulation), ~10× faster in the hot path. */

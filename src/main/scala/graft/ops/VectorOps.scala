@@ -454,7 +454,7 @@ object VectorOps {
     * embedding tables rarely arrive clustered). The canonical Lloyd loop in
     * MLlib k-means' shape: the centroids (nlist × dim floats) live on the
     * driver, and each round is ONE scan with ONE small shuffle. ASSIGN is a
-    * narrow projection against the centroids broadcast as one array row
+    * narrow projection against the centroids shipped as one literal array
     * ([[assignLists]]: argmax cosine, O(nlist) work per row, no shuffle, no
     * join back to the vectors); RE-CENTER is the per-(list, dim) average of
     * `buildCentroids` (posexplode + groupBy(list, dim) + avg, the one
@@ -497,21 +497,18 @@ object VectorOps {
 
   /** `v` (vec_id, embedding) with each row's `label`: the argmax cosine
     * over the driver-held centroid rows `cents` (shaped by `schema`,
-    * (label, centroid)), broadcast as ONE row `array<struct<label,
-    * centroid>>`. The per-row pick is `array_max` over (cosine, -label,
-    * label), the order of `max_by(label, struct(cosine, -label))`: the
-    * highest cosine wins (a NaN cosine ranks above every number, a null
-    * one below), a tie goes to the LOWEST list id, matching the probe
-    * tie-break. A narrow projection: no shuffle, no join back. No
+    * (label, centroid)), shipped as ONE literal `array<struct<label,
+    * centroid>>` ([[Tables.rowsLit]]). The per-row pick is `array_max` over
+    * (cosine, -label, label), the order of `max_by(label, struct(cosine,
+    * -label))`: the highest cosine wins (a NaN cosine ranks above every
+    * number, a null one below), a tie goes to the LOWEST list id, matching
+    * the probe tie-break. A narrow projection: no shuffle, no join back. No
     * centroids, no rows. */
   private def withLists(v: DataFrame, cents: Seq[Row], schema: StructType): DataFrame = {
-    val row = v.sparkSession.createDataFrame(java.util.Collections.singletonList(Row(cents)),
-      StructType(Seq(StructField("cents", ArrayType(schema, containsNull = false)))))
-    val best = array_max(transform(col("cents"), c => struct(
+    val best = array_max(transform(rowsLit(cents, schema), c => struct(
       cosineFast(col("embedding"), c.getField("centroid")).as("cs"),
       (-c.getField("label")).as("neg_label"), c.getField("label").as("label"))))
-    val out = v.crossJoin(broadcast(row))
-      .select(col("vec_id"), col("embedding"), best.getField("label").as("label"))
+    val out = v.select(col("vec_id"), col("embedding"), best.getField("label").as("label"))
     if (cents.isEmpty) out.limit(0) else out
   }
 

@@ -156,9 +156,14 @@ class IvfTrainSpec extends SparkTestBase {
     // events of earlier queries must not reach the listener
     org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
     spark.listenerManager.register(listener)
-    val (_, jobs) = try withJobs(VectorOps.trainIvf(embeddings(sf), 16, iters = 2))
+    val (_, jobStages) = try withJobStages(VectorOps.trainIvf(embeddings(sf), 16, iters = 2))
       finally spark.listenerManager.unregister(listener)
+    val jobs = jobStages.flatten.map(_.name)
     assert(jobs.nonEmpty && !jobs.exists(_.startsWith("localCheckpoint")), jobs)
+    // the centroids ride in the plan: no job scans a driver-built local
+    // table (the one-task job a broadcast of such a table starts)
+    val scopes = jobStages.map(_.flatMap(_.rddInfos).flatMap(_.scope).map(_.name))
+    assert(!scopes.exists(_.exists(_.startsWith("LocalTableScan"))), scopes)
     val helper = new AdaptiveSparkPlanHelper {}
     val shuffles = plans.toArray(Array.empty[SparkPlan]).toSeq
       .map(p => helper.collect(p) { case x: ShuffleExchangeExec => x }.size)

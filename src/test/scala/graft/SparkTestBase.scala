@@ -28,19 +28,26 @@ trait SparkTestBase extends AnyFunSuite {
 
   /** `body`'s result and the stage names of every Spark job it started. */
   def withJobs[T](body: => T): (T, Seq[String]) = {
+    val (r, stages) = withJobStages(body)
+    (r, stages.flatten.map(_.name))
+  }
+
+  /** `body`'s result and, per Spark job it started, that job's stages. */
+  def withJobStages[T](body: => T): (T, Seq[Seq[org.apache.spark.scheduler.StageInfo]]) = {
     import org.apache.spark.sql.GraftListenerBridge.waitUntilListenerBusEmpty
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    import org.apache.spark.scheduler.StageInfo
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[StageInfo]]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        js.stageInfos.foreach(si => names.add(si.name))
+        jobs.add(js.stageInfos)
     }
     waitUntilListenerBusEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val r = body
       waitUntilListenerBusEmpty(spark.sparkContext)
-      (r, names.toArray(Array.empty[String]).toSeq)
+      (r, jobs.toArray(Array.empty[Seq[StageInfo]]).toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
