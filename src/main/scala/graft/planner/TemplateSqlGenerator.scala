@@ -10,8 +10,7 @@ import graft.planner.PlannerHooks.SqlGenerator
   * zero network. An LLM-backed generator swaps in behind the same
   * `SqlGenerator` seam for open-vocabulary questions.
   *
-  * Grammar (all matching on lowercased word tokens; a string literal keeps
-  * the question's spelling):
+  * Grammar (all matching on lowercased word tokens):
   *   - aggregate: "how many"/"count" → COUNT(*); "total"/"sum" → SUM;
   *     "average"/"avg"/"mean" → AVG; "max(imum)"/"highest" → MAX;
   *     "min(imum)"/"lowest" → MIN. No aggregate verb → plain row SELECT.
@@ -130,6 +129,9 @@ object TemplateSqlGenerator extends SqlGenerator {
       })
     }
 
+  private def tokens(q: String): Seq[String] =
+    q.toLowerCase.split("\\W+").filter(_.nonEmpty).toSeq
+
   private def mentioned(toks: Seq[String], c: Col): Boolean =
     c.parts.forall(toks.contains) || toks.contains(c.name.toLowerCase) ||
       c.stripped.forall(toks.contains)
@@ -167,8 +169,7 @@ object TemplateSqlGenerator extends SqlGenerator {
     val qMarked = dates.zipWithIndex.foldLeft(question) {
       case (acc, (d, i)) => acc.replaceFirst(d, s" graftdate$i ")
     }
-    val rawOrig = qMarked.split("\\W+").filter(_.nonEmpty).toSeq
-    val rawToks = rawOrig.map(_.toLowerCase)
+    val rawToks = tokens(qMarked)
     def dateOf(tok: String): Option[String] =
       if (tok.startsWith("graftdate"))
         tok.stripPrefix("graftdate").toIntOption.flatMap(dates.lift)
@@ -223,8 +224,6 @@ object TemplateSqlGenerator extends SqlGenerator {
         case _ => (None, rawToks)
       }
     }
-    // the same tokens as spelled, with the same HAVING span masked
-    val orig = rawOrig.patch(rawToks.indexOf("having"), Nil, rawToks.length - toks.length)
     val q = toks.mkString(" ")
 
     // table choice: most name/column mentions, catalog order on ties.
@@ -434,7 +433,6 @@ object TemplateSqlGenerator extends SqlGenerator {
             if (toks.slice(i, i + c.parts.size) == c.parts) c.parts.size
             else c.stripped.size
           val rest = toks.drop(i + matchedLen)
-          val restOrig = orig.drop(i + matchedLen)
           // a date-typed column compares against DATE literals; string-typed
           // date columns (the reference's date-as-string shape, FIXTURES §A)
           // compare lexicographically — exact for ISO yyyy-mm-dd
@@ -446,14 +444,13 @@ object TemplateSqlGenerator extends SqlGenerator {
           val nullWords = Set("null", "missing", "empty", "blank")
           // "excluding <col> [is] <v>" flips the equality built below
           val excluded = i > 0 && toks(i - 1) == "excluding"
-          // the value is rest(k); a string literal keeps its spelling
-          def eqPred(k: Int, neg: Boolean): Option[String] = {
-            val (op, v) = (if (neg) "<>" else "=", rest(k))
+          def eqPred(v: String, neg: Boolean): Option[String] = {
+            val op = if (neg) "<>" else "="
             if (v.matches(num)) Some(s"${ref(c.name)} $op $v")
             else if (dateOf(v).isDefined)
               Some(s"${ref(c.name)} $op ${dlit(dateOf(v).get)}")
             else if (c.numeric) None
-            else Some(s"${ref(c.name)} $op '${restOrig(k).replace("'", "''")}'")
+            else Some(s"${ref(c.name)} $op '${v.replace("'", "''")}'")
           }
           // (predicate, tokens consumed AFTER the column mention)
           val pred: Option[(String, Int)] = rest match {
@@ -483,14 +480,14 @@ object TemplateSqlGenerator extends SqlGenerator {
               Some((s"${ref(c.name)} IS NOT NULL", 3))
             case "is" +: w +: _ if nullWords.contains(w) =>
               Some((s"${ref(c.name)} IS NULL", 2))
-            case "is" +: "not" +: _ +: _ =>
-              eqPred(2, neg = true).map((_, 3))
-            case "not" +: _ +: _ =>
-              eqPred(1, neg = true).map((_, 2))
-            case rel +: _ +: _ if Set("is", "equals").contains(rel) =>
-              eqPred(1, neg = excluded).map((_, 2))
-            case _ +: _ if excluded =>
-              eqPred(0, neg = true).map((_, 1))
+            case "is" +: "not" +: v +: _ =>
+              eqPred(v, neg = true).map((_, 3))
+            case "not" +: v +: _ =>
+              eqPred(v, neg = true).map((_, 2))
+            case rel +: v +: _ if Set("is", "equals").contains(rel) =>
+              eqPred(v, neg = excluded).map((_, 2))
+            case v +: _ if excluded =>
+              eqPred(v, neg = true).map((_, 1))
             case _ => None
           }
           pred.map { case (p, consumed) =>

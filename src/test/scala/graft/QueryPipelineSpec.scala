@@ -462,8 +462,7 @@ class QueryPipelineSpec extends SparkTestBase {
     // the reference's rule is CASE-SENSITIVE exact values
     // (langgraph_pipeline.py:436: "EXACT values ... case-sensitive"): a
     // correctly spelled but lowercased user value must still ground,
-    // because the plain grammar would emit the literal as the question
-    // spells it, lower case (no match)
+    // because the plain grammar would emit a lowercased (no-match) literal
     val dir = graft.ops.GroundOps.ensureGroundCollection(spark, sf)
     val catalog = Seq(CatalogOps.profileTable(spark, sf, "nation"))
     val ans = QueryPipeline.run(spark, "nations like nation_7", catalog,
