@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DecimalType, LongType}
 import Tables._
 
 /** Grouped-analytics widening of the delegated-SQL surface (SURVEY §2b/§2c):
@@ -74,41 +75,39 @@ object GroupAnalytics {
   /** Exact global rank over a strict total order WITHOUT a single-partition
     * window — the 100 TB path for ntile/rank/row_number with no PARTITION
     * BY. Shape: range-partition on the sort key (Spark's sampled range
-    * exchange — the same machinery a global `orderBy` uses), pin the
-    * partitioning with an eager `localCheckpoint` so the offset pass and
-    * the rank pass cannot be re-planned differently by AQE, count rows per
-    * partition (a numPartitions-row collect — metadata-scale, like a Delta
-    * log read), and add each partition's cumulative offset to its local
-    * `row_number`. Every window is bounded by one range partition; nothing
-    * global ever lands on one task. `sortCols` must be a strict total
-    * order (include a unique tiebreak), otherwise boundary rows could
-    * rank nondeterministically. */
+    * exchange — the same machinery a global `orderBy` uses) into `parts`
+    * partitions (default: the session's `spark.sql.shuffle.partitions`,
+    * the width any sort uses), sort within each partition, and number the
+    * rows with `RDD.zipWithIndex`: one job counts each partition, the
+    * driver turns the counts into start offsets, and the index pass adds
+    * them. Both passes run on the one RDD whose range shuffle is already
+    * written, so they read the same partition order and no checkpoint is
+    * needed to pin it; the total is one more count over the same files.
+    * Nothing global ever lands on one task. `sortCols` must be a strict
+    * total order (include a unique tiebreak), otherwise rows tied on the
+    * key could rank nondeterministically. */
   def globalRanks(df: DataFrame, sortCols: Seq[org.apache.spark.sql.Column],
-      parts: Int = 32): (DataFrame, Long) = {
-    val ranged = df.repartitionByRange(parts, sortCols: _*).localCheckpoint()
-    val withPid = ranged.withColumn("pid", spark_partition_id())
-    val sizes = withPid.groupBy("pid").agg(count(lit(1)).as("cnt")).collect()
-      .map(r => r.getAs[Int]("pid") -> r.getAs[Long]("cnt")).toMap
-    val nParts = sizes.keys.maxOption.map(_ + 1).getOrElse(1)
-    val offsets = (0 until nParts).scanLeft(0L)((acc, p) =>
-      acc + sizes.getOrElse(p, 0L))
-    val offCol = element_at(
-      array(offsets.take(nParts).map(lit(_)): _*), col("pid") + 1)
-    val w = Window.partitionBy("pid").orderBy(sortCols: _*)
-    (withPid.withColumn("grank", offCol + row_number().over(w))
-      .drop("pid"), offsets(nParts))
+      parts: Int = SQLConf.get.numShufflePartitions): (DataFrame, Long) = {
+    val indexed = df.repartitionByRange(parts, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+      .rdd.zipWithIndex()
+      .map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1)) }
+    (df.sparkSession.createDataFrame(indexed,
+      df.schema.add("grank", LongType, nullable = false)), indexed.count())
   }
 
   /** NTILE from [[globalRanks]] — the scalable formulation of [[qNtile]],
     * same output, same oracle (the bucketing must be invisible to the
     * result, like the heavy-hitter and salted-join twins). SQL-standard
     * ntile arithmetic on the exact rank: with n = q·k + r, the first r
-    * buckets take q+1 rows — pure integer division, no float boundary. */
+    * buckets take q+1 rows — pure integer division, no float boundary.
+    * Constructing it runs the rank jobs (range sample, shuffle, partition
+    * count, total); executing it is one partial-aggregate shuffle. */
   def qNtileScalable(s: SparkSession, sf: String): DataFrame = {
-    // project to the two consumed columns BEFORE globalRanks: its eager
-    // checkpoint is a pruning barrier, so an unprojected input
-    // materializes (and range-shuffles, and windows) every orders column
-    // — 9 columns carried for the 2 the query reads (guide §2.3)
+    // project to the two consumed columns BEFORE globalRanks: its rows go
+    // through an RDD, which the optimizer cannot prune, so an unprojected
+    // input would range-shuffle and convert every orders column — 9
+    // columns carried for the 2 the query reads (guide §2.3)
     val (ranked, n) = globalRanks(
       t(s, sf, "orders").select(col("o_totalprice"), col("o_orderkey")),
       Seq(col("o_totalprice"), col("o_orderkey")))
@@ -118,19 +117,16 @@ object GroupAnalytics {
     val b = when(col("grank") <= lit(r * (q + 1)),
       expr(s"(grank + ${q}) div ${q + 1}"))
       .otherwise(expr(s"${r} + (grank - ${r * (q + 1)} + ${math.max(q, 1L) - 1}) div ${math.max(q, 1L)}"))
-    // hand off through a TINY eager checkpoint so the range-partitioned
-    // checkpoint globalRanks pinned (full-table-sized) can be freed here
-    // instead of accumulating per call (the dedup-cluster pattern)
-    val out = ranked.withColumn("bucket", b.cast("long"))
+    ranked.withColumn("bucket", b.cast("long"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
         dsum(col("o_totalprice"), 2).as("sum_price"),
         min(col("o_totalprice")).as("min_price"),
         max(col("o_totalprice")).as("max_price"))
+      // k rows at any scale: sort them in one task instead of sampling a
+      // second range exchange for them
+      .coalesce(1)
       .orderBy("bucket")
-      .localCheckpoint()
-    org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint(ranked)
-    out
   }
 
   /** Ordered string aggregation (LISTAGG/string_agg): nations per region,

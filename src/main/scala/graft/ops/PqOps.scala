@@ -59,11 +59,13 @@ object PqOps {
   /** ADC shortlist size for the re-rank stage. */
   val SHORTLIST = 50
 
-  /** Unit-normalize (double precision) so min-L2 == max-cosine. */
+  /** Unit-normalize (double precision) so min-L2 == max-cosine. A zero
+    * vector has no direction: its cells are null under any ANSI setting
+    * (`try_divide`), the values plain division gives with ANSI off. */
   private def unitNorm(emb: Column): Column = {
     val d = transform(emb, x => x.cast("double"))
     val n = sqrt(aggregate(d, lit(0.0), (s, x) => s + x * x))
-    transform(d, x => x / n)
+    transform(d, x => try_divide(x, n))
   }
 
   private def l2(a: Column, b: Column): Column =

@@ -97,10 +97,12 @@ object SkewOps {
     * The probe is a DELIBERATELY skewed key: view events are logged
     * anonymously (user 0) — the classic default-value pathology that
     * concentrates ~20% of a corpus on one key, exactly what salting
-    * exists for. All three measurements are metadata-scale driver reads
-    * (a count, a 1-row aggregate, a 1-row sketch estimate — the AQE
-    * decision shape), every one a deterministic pure function of the
-    * data, so the ORACLE replays measurements, decision, and result:
+    * exists for. The three measurements (build row count, 1-row skew
+    * report, 1-row sketch estimate) are cross-joined into ONE 1-row frame
+    * and read with one collect — a metadata-scale driver read, the AQE
+    * decision shape — over un-checkpointed key counts whose exchanges
+    * the plan reuses. Each is a deterministic pure function of the data,
+    * so the ORACLE replays measurements, decision, and result:
     * the routing must be invisible in the output (the salted-join /
     * broadcast-join twins' invariant), and the decision column itself is
     * hash-checked. The corpus lands on `salt` at sf0.01/sf0.1 (build >
@@ -112,49 +114,29 @@ object SkewOps {
   private val MinJoinRowsForSalt = 5000L
 
   def qPlannedSkewJoin(s: org.apache.spark.sql.SparkSession, sf: String): DataFrame = {
-    import org.apache.spark.sql.GraftCheckpointUtils.unpersistCheckpoint
     val ev = Tables.events(s, sf)
       .select(when(col("event_type") === "view", lit(0L))
         .otherwise(col("user_id")).as("uid"), col("value"))
     val cust = Tables.t(s, sf, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    // ONE key-count pass per side feeds EVERY measurement (r18): the probe
-    // skew report and the probe-side CM sketch both need ev.groupBy(uid)
-    // counts, and the build cardinality is exactly Σwn of the build-side
-    // key counts the sketch needs anyway — so each side is aggregated
-    // once, checkpointed (key-cardinality-sized, freed before return),
-    // and the three measurements become three bounded reads of those two
-    // small tables instead of three independent corpus passes (profiled:
-    // 18 AQE jobs, half the query wall in driver scheduling between
-    // measurement actions). Measured values are identical by construction
-    // — the oracle replays measurements, decision, and result unchanged.
+    // ONE key-count pass per side feeds every measurement: the skew report
+    // and the probe-side CM sketch both read ev's key counts, and the build
+    // cardinality is Σwn of the build-side key counts the sketch needs
+    // anyway; the plan reuses each key-count exchange for both consumers.
     val evCnt = ev.groupBy(col("uid").as("k")).agg(count(lit(1)).as("wn"))
-      .localCheckpoint()
     val custCnt = cust.groupBy(col("c_custkey").as("k"))
-      .agg(count(lit(1)).as("wn")).localCheckpoint()
-    val (buildRows, hotPct, estJoinRows) =
-      try {
-        // measurement 1: build cardinality (Σ per-key counts = row count)
-        val buildRows = Option(custCnt.agg(sum(col("wn")).as("n"))
-            .collect()(0).getAs[java.lang.Long]("n"))
-          .map(_.longValue).getOrElse(0L)
-        // measurement 2: probe-key skew (1-row report over the key counts)
-        val hotPct = Option(evCnt
-            .agg(expr("(max(wn) * 100 * count(1)) div sum(wn)").as("hot"))
-            .collect()(0).getAs[java.lang.Long]("hot"))
-          .map(_.longValue).getOrElse(0L)
-        // measurement 3: join cardinality priced from two 8 KB CM sketches,
-        // built on the NATIVE long keys (Carter–Wegman integer hash rows —
-        // no string render, no md5; see SketchOps.cmCellKey)
-        val estJoinRows = Option(SketchOps.cmJoinEstimate(evCnt, custCnt)
-            .collect()(0).getAs[java.lang.Long]("est_n"))
-          .map(_.longValue).getOrElse(0L)
-        (buildRows, hotPct, estJoinRows)
-      } finally {
-        // measurement-only state: the executed join below never reads it
-        unpersistCheckpoint(evCnt)
-        unpersistCheckpoint(custCnt)
-      }
+      .agg(count(lit(1)).as("wn"))
+    val m = custCnt.agg(sum(col("wn")).as("build_rows")) // build cardinality
+      // probe-key skew (1-row report over the key counts)
+      .crossJoin(evCnt.agg(expr("(max(wn) * 100 * count(1)) div sum(wn)").as("hot")))
+      // join cardinality priced from two 8 KB CM sketches, built on the
+      // NATIVE long keys (Carter–Wegman integer hash rows — no string
+      // render, no md5; see SketchOps.cmCellKey)
+      .crossJoin(SketchOps.cmJoinEstimate(evCnt, custCnt))
+      .head()
+    // an empty side aggregates to null: measure it as 0
+    def measured(i: Int): Long = if (m.isNullAt(i)) 0L else m.getLong(i)
+    val (buildRows, hotPct, estJoinRows) = (measured(0), measured(1), measured(2))
     val decision =
       if (buildRows <= BroadcastCapRows) "broadcast"
       else if (estJoinRows >= MinJoinRowsForSalt && hotPct >= SaltHotPct) "salt"

@@ -110,36 +110,23 @@ object StatsOps {
     java.time.LocalDate.parse(date).atStartOfDay(java.time.ZoneOffset.UTC)
       .toInstant.toEpochMilli * 1000.0
 
-  /** Oracle wiring: write lineitem range-partitioned on l_shipdate (8
-    * files, each covering a narrow date band), build the footer index,
-    * prune to a one-quarter window, and aggregate the survivors. The
-    * oracle runs the same filter+agg over the ORIGINAL table — pruning
-    * must be invisible in the result. StatsOpsSpec additionally asserts
-    * the prune actually dropped most files (the perf claim). */
-  /** Stage (once per process) the range-partitioned-by-l_shipdate lineitem
-    * copy both pruned-scan faces read — 8 files, each covering a narrow
-    * date band, the layout footer stats can actually skip. */
-  def stagedShipdateLayout(s: SparkSession, sf: String): String = {
-    Option(new java.io.File("target/tmp_stats_scan").listFiles()).foreach(_.foreach { f =>
-      val ownerDead = f.getName.split("_").lastOption.flatMap(_.toLongOption)
-        .exists(p => !java.lang.ProcessHandle.of(p).isPresent)
-      if (ownerDead) VectorOps.deleteRecursively(f)
-    })
-    val work = s"target/tmp_stats_scan/sf${sf.replaceAll("[^A-Za-z0-9._-]", "_")}" +
-      s"_${java.lang.ProcessHandle.current.pid}"
-    // INT96 footers carry no usable stats; write micros explicitly.
-    // The staged layout is deterministic, so write it once per process
-    // (_SUCCESS-guarded): repeat runs then time the INDEX + PRUNED READ —
-    // the operation under test — not a redundant rewrite of the table.
-    if (!new java.io.File(s"$work/_SUCCESS").exists) {
+  /** The range-partitioned-by-l_shipdate lineitem copy both pruned-scan
+    * faces read — 8 files, each covering a narrow date band, the layout
+    * footer stats can actually skip. A persisted artifact, one per lineitem
+    * fingerprint: the layout is deterministic, so repeat runs time the
+    * INDEX + PRUNED READ — the operation under test — not a rewrite of the
+    * table. The commit marker is not a `.parquet` file, so
+    * [[footerStats]] never lists it. */
+  def stagedShipdateLayout(s: SparkSession, sf: String): String =
+    ArtifactStore.ensure("stats_layout",
+      ArtifactStore.sourceName(sf, "lineitem", "shipdate-v1")) { tmp =>
+      // INT96 footers carry no usable stats; write micros explicitly
       s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       t(s, sf, "lineitem")
         .repartitionByRange(8, col("l_shipdate"))
         .sortWithinPartitions("l_shipdate")
-        .write.mode("overwrite").option("compression", "zstd").parquet(work)
+        .write.option("compression", "zstd").parquet(tmp.toString)
     }
-    work
-  }
 
   /** The one-quarter window filter + aggregate both faces share. */
   private def shipdateWindowAgg(df: DataFrame): DataFrame =
@@ -149,6 +136,12 @@ object StatsOps {
       .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
       .orderBy("l_returnflag")
 
+  /** Oracle wiring: write lineitem range-partitioned on l_shipdate (8
+    * files, each covering a narrow date band), build the footer index,
+    * prune to a one-quarter window, and aggregate the survivors. The
+    * oracle runs the same filter+agg over the ORIGINAL table — pruning
+    * must be invisible in the result. StatsOpsSpec additionally asserts
+    * the prune actually dropped most files (the perf claim). */
   def qPrunedScan(s: SparkSession, sf: String): DataFrame = {
     val work = stagedShipdateLayout(s, sf)
     val (df, _, _) = prunedScan(s, work, "l_shipdate",

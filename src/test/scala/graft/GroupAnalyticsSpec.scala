@@ -40,9 +40,11 @@ class GroupAnalyticsSpec extends SparkTestBase {
 
   test("ntile: scalable range-partitioned rank equals the global window, " +
     "and globalRanks is a permutation of 1..n") {
-    val win = GroupAnalytics.qNtileWindow(spark, sf)
-    val scl = GroupAnalytics.qNtileScalable(spark, sf)
-    assert(scl.exceptAll(win).isEmpty && win.exceptAll(scl).isEmpty)
+    Seq(sf, sf01).foreach { d =>
+      val win = GroupAnalytics.qNtileWindow(spark, d)
+      val scl = GroupAnalytics.qNtileScalable(spark, d)
+      assert(scl.exceptAll(win).isEmpty && win.exceptAll(scl).isEmpty, d)
+    }
     val orders = Tables.t(spark, sf, "orders")
     val (ranked, n) = GroupAnalytics.globalRanks(orders,
       Seq(col("o_totalprice"), col("o_orderkey")), parts = 7)
@@ -55,6 +57,15 @@ class GroupAnalyticsSpec extends SparkTestBase {
     val ref3 = orders.orderBy(col("o_totalprice"), col("o_orderkey"))
       .select("o_totalprice").limit(3).collect().map(_.getDouble(0))
     assert(top3.toSeq == ref3.toSeq)
+  }
+
+  test("ntile: q_ntile runs at most 7 jobs at sf0.01, none a localCheckpoint") {
+    // warm: schema reads of a first construction are not the query's jobs
+    GroupAnalytics.qNtile(spark, sf01).collect()
+    val (_, jobs) = withJobStages(GroupAnalytics.qNtile(spark, sf01).collect())
+    val names = jobs.map(_.map(_.name))
+    assert(jobs.size <= 7, names)
+    assert(!names.flatten.exists(_.startsWith("localCheckpoint")), names)
   }
 
   test("argmax: associative max(struct) agrees with the window formulation") {

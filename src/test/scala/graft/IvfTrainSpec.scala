@@ -50,9 +50,6 @@ class IvfTrainSpec extends SparkTestBase {
     }
   }
 
-  /** The sf0.01 fixture, beside the shared sf0.001 one. */
-  private val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
-
   private def embeddings(sfDir: String): DataFrame =
     Tables.t(spark, sfDir, "embeddings").select("vec_id", "embedding")
 

@@ -354,7 +354,7 @@ class PlanSpec extends SparkTestBase {
       "q_retrieval_metrics",   // ≤300 distinct eval terms for `term IN` pushdown
       "q_ivf_topk_batch",      // embeddings count() sizes adaptive nlist
       "q_multifile_scan",      // file listing for the glob
-      "q_ntile",               // numPartitions-row range-offset collect
+      "q_ntile",               // range-sort and zipWithIndex count jobs
       // NL faces profile the catalog (CatalogOps stats pass) up front
       "q_nl_count_group", "q_nl_max_filter_group", "q_nl_topk_group",
       "q_nl_having_group", "q_nl_or_filter", "q_nl_not_filter",

@@ -81,9 +81,6 @@ class PqTrainSpec extends SparkTestBase {
           x => x.getField("code")).as("codes"))
   }
 
-  /** The sf0.01 fixture, beside the shared sf0.001 one. */
-  private val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
-
   private def embeddings(sfDir: String): DataFrame =
     Tables.t(spark, sfDir, "embeddings").select("vec_id", "embedding")
 
@@ -135,14 +132,24 @@ class PqTrainSpec extends SparkTestBase {
     assertSameAsRelational(e.filter(col("vec_id") < KSUB - 2).unionByName(odd), iters = 1)
     assert(PqOps.encodePq(withOdd, PqOps.trainPq(withOdd))
       .filter(col("vec_id") >= 900001L).count() == 2, "odd rows are encoded")
-    // a zero vector divides by a zero norm: that raises DIVIDE_BY_ZERO
-    // under ANSI arithmetic, and yields null cells without it
+    // a zero vector has a zero norm: trainPq and encodePq normalize it to
+    // null cells under the session's ANSI setting, the cells the
+    // relational loop's plain division gives only with ANSI off
     val zero = e.filter(col("vec_id") < KSUB - 1).unionByName(spark.createDataFrame(
       java.util.Arrays.asList(Row(900003L, Seq.fill(dim)(0.0f))), e.schema))
+    def local(df: DataFrame): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val books = local(PqOps.trainPq(zero))
+    val codes = local(PqOps.encodePq(zero, books))
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    try assertSameAsRelational(zero)
-    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    val (rbooks, rcodes) = try {
+      val rb = Relational.trainPq(zero)
+      (local(rb), local(Relational.encodePq(zero, rb)))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assertRowEqual(books, rbooks, "codebooks with a zero vector")
+    assertRowEqual(codes, rcodes, "codes with a zero vector")
+    assert(codes.count() == zero.count(), "every vector encoded once")
   }
 
   test("trainPq and encodePq equal the relational loop on fewer rows than KSUB") {

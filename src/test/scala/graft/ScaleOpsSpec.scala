@@ -111,6 +111,37 @@ class ScaleOpsSpec extends SparkTestBase {
       "salted routing changed the join result")
   }
 
+  test("planned skew join: one measurement read in at most 17 jobs, no " +
+    "localCheckpoint, measurements equal three separate reads") {
+    // the three measurements read one at a time, as separate actions
+    def separately(d: String): Seq[Long] = {
+      val ev = Tables.events(spark, d).select(when(col("event_type") === "view",
+        lit(0L)).otherwise(col("user_id")).as("k"))
+        .groupBy("k").agg(count(lit(1)).as("wn"))
+      val cust = Tables.t(spark, d, "customer").select(col("c_custkey").as("k"))
+        .groupBy("k").agg(count(lit(1)).as("wn"))
+      def one(df: org.apache.spark.sql.DataFrame): Long =
+        Option(df.head().get(0)).fold(0L)(_.asInstanceOf[Long])
+      Seq(one(cust.agg(sum(col("wn")))),
+        one(graft.ops.SketchOps.cmJoinEstimate(ev, cust)),
+        one(ev.agg(expr("(max(wn) * 100 * count(1)) div sum(wn)"))))
+    }
+    Seq(sf -> "broadcast", sf01 -> "salt").foreach { case (d, decision) =>
+      val got = SkewOps.qPlannedSkewJoin(spark, d)
+        .select("decision", "build_rows", "est_join_rows", "hot_pct_of_mean")
+        .distinct().collect().toSeq
+      assert(got.size == 1, got)
+      assert(got.head.getString(0) == decision, got)
+      assert((1 to 3).map(got.head.getLong) == separately(d), s"$d: $got")
+    }
+    // warm (above): schema reads of a first construction are not the
+    // query's jobs
+    val (_, jobs) = withJobStages(SkewOps.qPlannedSkewJoin(spark, sf01).collect())
+    val names = jobs.map(_.map(_.name))
+    assert(jobs.size <= 17, names)
+    assert(!names.flatten.exists(_.startsWith("localCheckpoint")), names)
+  }
+
   test("planned skew agg: the profile drives salted at sf0.01 and plain at " +
     "sf0.001, the two-level __salt aggregate engages, routing invisible") {
     val sf01 = "/root/testdata/sf0.01"

@@ -15,6 +15,9 @@ trait SparkTestBase extends AnyFunSuite {
 
   def sf: String = "/root/testdata/sf0.001"
 
+  /** The sf0.01 fixture, beside [[sf]]. */
+  def sf01: String = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
+
   /** The reference's own workbook (FIXTURES.md §A). The specs that check
     * against ground truth taken from this exact file call
     * [[assumeReferenceLoanXlsx]] first, so they cancel where it is absent;
